@@ -12,9 +12,10 @@ handling).
 
 Scale shape (the part that matters at 100 TB):
   - The benchmark side is SMALL by construction (an eval set, thousands of
-    docs). Its distinct shingle set is broadcast — guarded by an explicit
-    count, same policy as lsh.semi_join_bands — so the corpus is NEVER
-    shuffled: the contamination probe runs map-side inside the corpus scan.
+    docs). Its distinct shingle set is broadcast — decided by an explicit
+    count of that set, never by the planner's estimate, and refused above
+    BROADCAST_GRAM_LIMIT — so the corpus is NEVER shuffled: the
+    contamination probe runs map-side inside the corpus scan.
   - Only matching (doc_id, gram) hits leave the map stage; the per-doc
     aggregation shuffles hit rows only (a vanishing fraction of the corpus).
   - Everything is native Catalyst (tokenize/shingle/hash are codegen

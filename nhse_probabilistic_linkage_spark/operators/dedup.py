@@ -90,21 +90,17 @@ def minhash_lsh_pairs(
     # with the cut placed after the MinHash kernel none of those scans re-runs
     # the Arrow UDF. localCheckpoint (not lazy persist): blocks are freed
     # when the handle is GC'd, so repeated calls in a long-lived session
-    # don't accumulate cache entries. The cut is LAZY with the corpus count
-    # as its first consumer (the ngram-operator idiom): ONE job both
-    # materializes the checkpoint and yields the count, which is a PROOF no
-    # band can exceed it — proven-small corpora take candidate_pairs'
-    # grouped tier (identical output, no window/persist/salt machinery).
+    # don't accumulate cache entries. The cut is LAZY: candidate_pairs'
+    # band-sizing job is its first consumer and materializes it, so the
+    # checkpoint costs no job of its own.
     docs = with_minhash(
         docs.select(id_col, "shingles"), num_perms=config.num_perms, seed=config.minhash_seed
     ).localCheckpoint(eager=False)
-    n_docs = docs.count()
     bands = band_keys(
         docs, id_col=id_col, bands=config.bands, rows_per_band=config.rows_per_band
     )
     cands, dropped = candidate_pairs(bands, id_col=id_col, band_cap=config.band_cap,
-                                     salt_threshold=config.salt_threshold, salt_groups=config.salt_groups,
-                                     max_band_rows=n_docs)
+                                     salt_threshold=config.salt_threshold, salt_groups=config.salt_groups)
     verified = verify_pairs(
         cands,
         docs,
@@ -127,14 +123,12 @@ def simhash_pairs(
     docs = prepare_docs(
         spread_input(df.select(id_col, text_col)), text_col=text_col, k=config.shingle_k
     )
-    # lazy cut + count first consumer: same one-job materialize-and-count
-    # idiom as minhash_lsh_pairs; the count proves the band-size bound
+    # lazy cut, materialized by its first consumer (candidate_pairs), as in
+    # minhash_lsh_pairs
     docs = with_simhash(docs.select(id_col, "shingles")).localCheckpoint(eager=False)
-    n_docs = docs.count()
     blocks = simhash_block_keys(docs, id_col=id_col, max_hamming=config.simhash_max_hamming)
     cands, _ = candidate_pairs(blocks, id_col=id_col, band_cap=config.band_cap,
-                                salt_threshold=config.salt_threshold, salt_groups=config.salt_groups,
-                                max_band_rows=n_docs)
+                                salt_threshold=config.salt_threshold, salt_groups=config.salt_groups)
     return verify_hamming(cands, docs, id_col=id_col, max_hamming=config.simhash_max_hamming)
 
 

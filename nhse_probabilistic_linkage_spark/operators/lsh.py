@@ -7,13 +7,17 @@ predict_dedupe.py:93). Here every band is one "blocking rule": two docs are
 candidates iff some band of their MinHash signatures hashes identically, and
 `match_key` records the first band that fired.
 
-Scale notes (the parts Catalyst cannot do for us):
+candidate_pairs builds ONE plan for every caller and input size; nothing
+in it branches on a caller's claim about the data. The parts Catalyst
+cannot do for us:
 - The band table is shuffled ONCE: a count(*) window over band_key sizes
   every band inside the same exchange (spillable, so mega-bands cost disk
   not heap), size routing (singleton prune / cap / salt) happens BEFORE any
-  list aggregation, and only cold bands are ever collect_list'ed — see
-  candidate_pairs for the structural memory bound and the measured
-  comparison against the histogram + self-join formulation it replaced.
+  list aggregation, and only cold bands are ever collect_list'ed; hot bands
+  go through a salted self-join so their O(size^2) emission spreads over
+  tasks — see candidate_pairs for the structural memory bound and the
+  measured comparison against the histogram + self-join formulation it
+  replaced.
 - Pathological bands (boilerplate pages that hash identically in some band)
   would generate O(size^2) pairs. Those are removed by an explicit band-size
   cap, with the dropped mass counted and returned — documented recall
@@ -88,63 +92,6 @@ def _salted_self_join_pairs(bands: DataFrame, id_col: str, salt_groups: int) -> 
     return left.join(right, ["band_key", "gid"]).where(F.col("id_l") < F.col("id_r")).drop("gid")
 
 
-def semi_join_bands(
-    bands_df: DataFrame, keys: DataFrame, broadcast_key_limit: int = 2_000_000
-) -> DataFrame:
-    """bands left-semi keys(band_key), with an EXPLICIT broadcast decision.
-
-    AQE cannot turn this into a broadcast on its own: the key list is a
-    filter over the CACHED size histogram (no shuffle boundary => no runtime
-    stats), and its static estimate inherits the full cache size. The count
-    is one cheap job over cached data; below the limit the semi join
-    broadcasts (no shuffle of the band table at all), above it — the
-    10^12-doc regime — it stays a shuffle semi-join, which still beats
-    shuffling every singleton row through the self-join."""
-    n_keys = keys.count()
-    build = F.broadcast(keys) if n_keys <= broadcast_key_limit else keys
-    return bands_df.join(build, "band_key", "left_semi")
-
-
-# Largest caller-proven band size for which candidate_pairs may take the
-# grouped proof tier (collect_list buffer <= this many ids = 0.5 MB worst
-# case; single-generator hot-band emission <= band_cap^2/2 rows). A proof
-# bound, not a tuning constant: corpora above it always take the fully
-# routed window/persist/salt path, so nothing changes at scale.
-GROUPED_TIER_ROWS = 65536
-
-
-def _tagged_union_checkpoint(pairs_part: DataFrame, dropped: DataFrame, spark):
-    """Materialize pairs + (tiny) dropped-band accounting in ONE tagged-union
-    checkpoint job; the returned views are cheap filters over the shared
-    checkpoint. Shared by the routed path and the grouped proof tier."""
-    idt = pairs_part.schema["id_l"].dataType
-    mkt = pairs_part.schema["match_key"].dataType
-    combined = (
-        pairs_part.select(
-            F.lit(0).alias("_t"),
-            "id_l",
-            "id_r",
-            "match_key",
-            F.lit(None).cast("bigint").alias("band_key"),
-            F.lit(None).cast("bigint").alias("band_size"),
-        )
-        .unionByName(
-            dropped.select(
-                F.lit(1).alias("_t"),
-                F.lit(None).cast(idt).alias("id_l"),
-                F.lit(None).cast(idt).alias("id_r"),
-                F.lit(None).cast(mkt).alias("match_key"),
-                "band_key",
-                "band_size",
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
-    pairs = combined.where(F.col("_t") == 0).select("id_l", "id_r", "match_key")
-    dropped_out = combined.where(F.col("_t") == 1).select("band_key", "band_size")
-    return pairs, dropped_out
-
-
 def _combination_pairs(grouped: DataFrame) -> DataFrame:
     """All unordered member pairs of each band group, natively.
 
@@ -174,10 +121,9 @@ def candidate_pairs(
     band_cap: int | None = 5000,
     salt_threshold: int | None = 500,
     salt_groups: int = 8,
-    persist_bands: bool = False,
-    max_band_rows: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Band table -> unique candidate pairs (id_l < id_r, match_key).
+    """Band table -> (unique candidate pairs (id_l < id_r, match_key),
+    dropped-band accounting (band_key, band_size)).
 
     ONE shuffle of the band table: a count(*) window over band_key sizes
     every band in the same exchange, size routing filters rows BEFORE any
@@ -204,6 +150,9 @@ def candidate_pairs(
                                can);
       size > band_cap          dropped entirely, returned in the accounting
                                table (band_key, band_size) — NEVER silent.
+    band_cap=None / salt_threshold=None mean "no cap" / "no salt": the
+    corresponding predicate is a constant false, so Catalyst prunes the
+    dropped or salted branch from the plan instead of running it empty.
 
     Memory bound, structural: band sizes come from count(*) over a window on
     the SAME band_key partitioning (WindowExec buffers each band in a
@@ -215,179 +164,71 @@ def candidate_pairs(
     buffer is capped at min(salt_threshold, band_cap) ids BY CONSTRUCTION,
     regardless of input. (With both caps disabled the bound disappears —
     the caller explicitly asked for unbounded bands.)
-
-    persist_bands is retained for API compatibility and ignored: the grouped
-    design scans the band table exactly once, so there is nothing to reuse.
-
-    max_band_rows (r6): a caller-supplied PROOF of the largest possible band
-    size (e.g. the corpus row count, which any single band can never exceed).
-    Two proof-carrying tiers replace the sizing/routing machinery (window
-    pass, persist, salted join) when the proof is strong enough — output is
-    identical in both (the drop condition is preserved exactly, and salting
-    only changes task placement, never the pair set):
-      max_band_rows <= band_cap        no band can be cap-dropped, so the
-                                       dropped table is empty BY CONSTRUCTION
-                                       and one groupBy+combination-explode
-                                       suffices;
-      max_band_rows <= GROUPED_TIER_ROWS   a band CAN exceed band_cap, so
-                                       the grouped tier keeps the drop filter
-                                       and its accounting (size(ids) over the
-                                       grouped row = the window's count(*)),
-                                       but the agg buffer is still bounded by
-                                       the proof (<= GROUPED_TIER_ROWS ids =
-                                       0.5 MB), no window sort is paid, and
-                                       hot-band pair emission streams from
-                                       one generator instead of the salted
-                                       join — worst case band_cap^2/2 narrow
-                                       rows from one task, acceptable exactly
-                                       because the tier only fires on proven-
-                                       small inputs.
-    Large corpora never qualify for either tier, so the structural memory
-    bound of the routed path is untouched at scale.
     """
-    del persist_bands  # single-scan design; see docstring
     from pyspark.sql import Window
 
-    spark = bands_df.sparkSession
-
-    if max_band_rows is not None and band_cap is not None and max_band_rows <= band_cap:
-        grouped = bands_df.groupBy("band_key").agg(
-            F.min("band_id").alias("band_id"), F.collect_list(id_col).alias("ids")
-        )
-        # the cap filter is provably a no-op under a TRUE proof (size <=
-        # max_band_rows <= band_cap); it stays as defense in depth so a
-        # caller passing a false proof still gets the routed path's exact
-        # pair set (over-cap bands dropped) rather than unbounded emission —
-        # only the (empty-by-proof) accounting table would miss those rows
-        pairs = (
-            _combination_pairs(
-                grouped.where((F.size("ids") >= 2) & (F.size("ids") <= band_cap))
-            )
-            .groupBy("id_l", "id_r")
-            .agg(F.min("band_id").alias("match_key"))
-            .localCheckpoint(eager=True)
-        )
-        return pairs, spark.createDataFrame([], "band_key bigint, band_size bigint")
-
-    if max_band_rows is not None and max_band_rows <= GROUPED_TIER_ROWS:
-        grouped = bands_df.groupBy("band_key").agg(
-            F.min("band_id").alias("band_id"), F.collect_list(id_col).alias("ids")
-        )
-        sz = F.size("ids")
-        if band_cap is None:
-            pairs = (
-                _combination_pairs(grouped.where(sz >= 2))
-                .groupBy("id_l", "id_r")
-                .agg(F.min("band_id").alias("match_key"))
-                .localCheckpoint(eager=True)
-            )
-            return pairs, spark.createDataFrame([], "band_key bigint, band_size bigint")
-        # ONE scan emits both pair rows and drop-accounting rows (a tagged
-        # generator over the grouped rows): a two-branch union here would
-        # re-execute the whole band subtree — including any Python kernel
-        # feeding it — once per branch (measured 4.2s vs 1.5s on the
-        # embedding path's 360k-bucket table; initial plan showed
-        # ArrowEvalPython x2, ReusedExchange x0). Kept groups stream their
-        # unordered pairs through the same sorted two-level explode as
-        # _combination_pairs (tag 0); over-cap groups emit exactly one
-        # sentinel row (tag 1, _ids = [null]); singletons die in the
-        # isNotNull filter. The single groupBy then dedups pairs across
-        # bands (band_key is nulled on pair rows) AND passes accounting
-        # rows through (one distinct (1, null, null, band_key) group per
-        # dropped band) — one exchange, one checkpoint job.
-        idt = bands_df.schema[id_col].dataType
-        null_id = F.array(F.lit(None).cast(idt))
-        tagged = grouped.select(
-            "band_id",
-            sz.cast("long").alias("_bs"),
-            F.when(sz > band_cap, F.lit(1)).otherwise(F.lit(0)).alias("_t"),
-            F.when(sz > band_cap, null_id)
-            .when(sz >= 2, F.array_sort("ids"))
-            .alias("_ids"),
-            F.when(sz > band_cap, F.col("band_key")).alias("band_key"),
-        ).where(F.col("_ids").isNotNull())
-        stream = (
-            tagged.select(
-                "_t", "band_id", "band_key", "_bs", "_ids",
-                F.posexplode("_ids").alias("_pos", "id_l"),
-            )
-            .select(
-                "_t", "band_id", "band_key", "_bs", "id_l",
-                F.explode(
-                    F.when(F.col("_t") == 1, null_id).otherwise(
-                        F.slice("_ids", F.col("_pos") + F.lit(2), F.size("_ids"))
-                    )
-                ).alias("id_r"),
-            )
-            .where((F.col("_t") == 1) | (F.col("id_l") != F.col("id_r")))
-        )
-        combined = (
-            stream.groupBy("_t", "id_l", "id_r", "band_key")
-            .agg(F.min("band_id").alias("match_key"), F.first("_bs").alias("band_size"))
-            .localCheckpoint(eager=True)
-        )
-        pairs = combined.where(F.col("_t") == 0).select("id_l", "id_r", "match_key")
-        dropped_out = combined.where(F.col("_t") == 1).select("band_key", "band_size")
-        return pairs, dropped_out
-
     bsize = F.col("_bsize")
+    over_cap = F.lit(False) if band_cap is None else bsize > band_cap
+    hot = F.lit(False) if salt_threshold is None else bsize > salt_threshold
     sized = bands_df.withColumn("_bsize", F.count("*").over(Window.partitionBy("band_key")))
-    # singletons (the overwhelming majority — measured 94.7% of keys at 240k
-    # docs) die HERE, before the persist and before any aggregation; only
-    # multi-member band rows are cached, and the cache keeps the window's
-    # hash(band_key) partitioning so the groupBys below add no exchange
+    # singletons die HERE, before the persist and before any aggregation;
+    # only multi-member band rows are cached, and the cache keeps the
+    # window's hash(band_key) partitioning so the groupBys below add no
+    # exchange
     multi = sized.where(bsize >= 2).persist(StorageLevel.MEMORY_AND_DISK)
 
-    if band_cap is not None:
-        dropped = (
-            multi.where(bsize > band_cap)
-            .groupBy("band_key")
-            .agg(F.first("_bsize").cast("long").alias("band_size"))
-        )
-        cap_ok = bsize <= band_cap
-    else:
-        dropped = None
-        cap_ok = F.lit(True)
+    dropped = (
+        multi.where(over_cap)
+        .groupBy("band_key")
+        .agg(F.first("_bsize").cast("long").alias("band_size"))
+    )
+    cold = (
+        multi.where(~over_cap & ~hot)
+        .groupBy("band_key")
+        .agg(F.min("band_id").alias("band_id"), F.collect_list(id_col).alias("ids"))
+    )
+    raw = _combination_pairs(cold).unionByName(
+        _salted_self_join_pairs(
+            multi.where(~over_cap & hot).select("band_key", "band_id", F.col(id_col)),
+            id_col,
+            salt_groups,
+        ).select("band_id", "id_l", "id_r")
+    )
+    pairs_part = raw.groupBy("id_l", "id_r").agg(F.min("band_id").alias("match_key"))
 
-    if salt_threshold is not None:
-        cold = (
-            multi.where(cap_ok & (bsize <= salt_threshold))
-            .groupBy("band_key")
-            .agg(F.min("band_id").alias("band_id"), F.collect_list(id_col).alias("ids"))
-        )
-        raw = _combination_pairs(cold).unionByName(
-            _salted_self_join_pairs(
-                multi.where(cap_ok & (bsize > salt_threshold)).select(
-                    "band_key", "band_id", F.col(id_col)
-                ),
-                id_col,
-                salt_groups,
-            ).select("band_id", "id_l", "id_r")
-        )
-    else:
-        grouped = (
-            multi.where(cap_ok)
-            .groupBy("band_key")
-            .agg(F.min("band_id").alias("band_id"), F.collect_list(id_col).alias("ids"))
-        )
-        raw = _combination_pairs(grouped)
-
-    # Materialize the (narrow) pair table eagerly, then release the grouped
-    # table: every downstream consumer (verify's semi-join + join, counts,
+    # Materialize the (narrow) pair table eagerly, then release the band
+    # cache: every downstream consumer (verify's semi-join + join, counts,
     # CC edges) scans `pairs` more than once, and without the cut the band
     # aggregation would re-execute per scan. Eager checkpoint also lets this
     # function own its persist scope — callers in long-lived sessions
     # (streaming micro-batches) never accumulate leaked cache blocks.
     # Pairs and the (tiny) dropped-band accounting ride ONE tagged union so
-    # both materialize in a single job (r6: the separate dropped checkpoint
-    # was a full extra job per candidate_pairs call); the views below are
-    # cheap filters over the shared checkpoint.
-    pairs_part = raw.groupBy("id_l", "id_r").agg(F.min("band_id").alias("match_key"))
-    if dropped is None:
-        pairs = pairs_part.localCheckpoint(eager=True)
-        multi.unpersist()
-        return pairs, spark.createDataFrame([], "band_key bigint, band_size bigint")
-
-    pairs, dropped = _tagged_union_checkpoint(pairs_part, dropped, spark)
+    # both materialize in a single job; the returned views are cheap filters
+    # over the shared checkpoint.
+    idt = pairs_part.schema["id_l"].dataType
+    mkt = pairs_part.schema["match_key"].dataType
+    combined = (
+        pairs_part.select(
+            F.lit(0).alias("_t"),
+            "id_l",
+            "id_r",
+            "match_key",
+            F.lit(None).cast("bigint").alias("band_key"),
+            F.lit(None).cast("bigint").alias("band_size"),
+        )
+        .unionByName(
+            dropped.select(
+                F.lit(1).alias("_t"),
+                F.lit(None).cast(idt).alias("id_l"),
+                F.lit(None).cast(idt).alias("id_r"),
+                F.lit(None).cast(mkt).alias("match_key"),
+                "band_key",
+                "band_size",
+            )
+        )
+        .localCheckpoint(eager=True)
+    )
     multi.unpersist()
+    pairs = combined.where(F.col("_t") == 0).select("id_l", "id_r", "match_key")
+    dropped = combined.where(F.col("_t") == 1).select("band_key", "band_size")
     return pairs, dropped

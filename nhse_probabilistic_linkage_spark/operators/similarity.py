@@ -100,18 +100,19 @@ def make_hyperplane_udf(dim: int, n_planes: int = 16, seed: int = 42, n_tables: 
 
 # Largest KNOWN corpus byte size (n_rows x row width) for which the verify
 # attach explicitly broadcasts the vector table — well inside the guide's
-# "a few hundred MB is usually fine" band; above it (but still inside the
-# proof tier) the attach pins a shuffled-hash join so the planner can never
-# broadcast the pair side off a bad estimate.
+# "a few hundred MB is usually fine" band; above it (but with a measured
+# row count <= verify.MEASURED_ATTACH_MAX_ROWS) the attach pins a
+# shuffled-hash join so the planner can never broadcast the pair side off
+# a bad estimate.
 VEC_BROADCAST_BYTES = 64 << 20
 
-# join-strategy hint for the proof-tier fallback when the vector table is
-# known-bounded but too big to broadcast. A/B at sf1.0 (20k vectors, tier
-# path, verify-noop): explicit vec broadcast 0.75-1.9s, shuffle_hash
+# join-strategy hint for the attach fallback when the vector table is
+# known-bounded but too big to broadcast. A/B at sf1.0 (20k vectors,
+# verify-noop): explicit vec broadcast 0.75-1.9s, shuffle_hash
 # 1.4-1.8s, merge 1.9-2.6s, planner-on-bad-estimate 6.4-6.5s (it broadcast
 # the 1.3M-row pair side). The build side is the vector table, bounded by
-# the proof (<= GROUPED_TIER_ROWS rows split across partitions), so the
-# SHJ OOM risk the guide warns about cannot arise here.
+# the measured count (<= MEASURED_ATTACH_MAX_ROWS rows split across
+# partitions), so the SHJ OOM risk the guide warns about cannot arise here.
 _FALLBACK_HINT: str | None = "shuffle_hash"
 
 
@@ -129,7 +130,6 @@ def embedding_neardup_pairs(
     salt_threshold: int | None = 500,
     salt_groups: int = 8,
     with_accounting: bool = False,
-    max_band_rows: int | None = None,
 ) -> DataFrame:
     """Pairs (id_l, id_r, cosine >= threshold).
 
@@ -156,14 +156,9 @@ def embedding_neardup_pairs(
     dropped_buckets = (band_key, band_size) rows for over-cap buckets —
     never-silent recall accounting, same contract as MinHash dropped bands
     (empty on the exact path, which enumerates all pairs).
-
-    max_band_rows: optional caller-supplied PROOF of the corpus row count
-    (any single bucket can never exceed it) — forwarded to
-    candidate_pairs' routing-free small-corpus fast path. Needed only when
-    dim/n_planes/n_tables are all pinned (the probe is skipped then); when
-    the probe runs, its exact count takes precedence.
     """
-    from nhse_probabilistic_linkage_spark.operators.lsh import GROUPED_TIER_ROWS, candidate_pairs
+    from nhse_probabilistic_linkage_spark.operators.lsh import candidate_pairs
+    from nhse_probabilistic_linkage_spark.operators.verify import MEASURED_ATTACH_MAX_ROWS
 
     dropped = df.sparkSession.createDataFrame([], "band_key bigint, band_size bigint")
     if not exact:
@@ -183,11 +178,9 @@ def embedding_neardup_pairs(
         slim = df.select(
             F.col(id_col), F.col(vec_col), norm_expr(vec_col).alias("_n")
         ).localCheckpoint(eager=False)
-        # caller-supplied band-size proof (see candidate_pairs); when the
-        # probe below runs, its exact corpus count is at least as tight, so
-        # it takes precedence — this keeps the fast path available to
-        # callers that pin dim/n_planes/n_tables and therefore skip the probe
-        n_rows = max_band_rows
+        # measured corpus count for the verify-attach strategy below; unknown
+        # when the caller pins dim/n_planes/n_tables (the probe is skipped)
+        n_rows = None
         if dim is None or n_planes is None or n_tables is None:
             # ONE probe job fuses the vector-dim peek and the corpus-density
             # count that size the tables from the collision model (see
@@ -218,38 +211,32 @@ def embedding_neardup_pairs(
         bkts = slim.select(
             F.col(id_col), F.posexplode(bucket(vec_col)).alias("band_id", "band_key")
         )
-        # max_band_rows: the probe's corpus count is a PROOF that no bucket
-        # can exceed n_rows members, so small corpora (n_rows <= band_cap)
-        # take candidate_pairs' routing-free fast path — the r6 fix for the
-        # r5 verdict's q60 constant-factor regression. Identical output
-        # (cap can't fire, salting never changes the pair set); large
-        # corpora keep the full cap/salt/accounting machinery.
         cand, dropped = candidate_pairs(
             bkts,
             id_col=id_col,
             band_cap=band_cap,
             salt_threshold=salt_threshold,
             salt_groups=salt_groups,
-            max_band_rows=n_rows,
         )
         # EXPLICIT attach strategy (r6): the pair checkpoint's planner
         # estimate is unreliable (a LogicalRDD inherits its ORIGIN plan's
-        # estimate, and the grouped-tier chain under-estimates by >10x), and
+        # estimate, which can under-estimate by >10x), and
         # at 20k vectors / 12 planes the candidate tail is ~1.3M pairs — the
         # planner happily broadcast THAT side and the verify went 1.2s ->
         # 8-47s (building a 1.3M-row hash relation per join). The corpus
         # side's size is KNOWN here (n_rows x dim from the probe), so the
-        # decision is made from facts, the semi_join_bands discipline:
-        # provably-small corpus -> broadcast the vectors (never the pairs);
-        # bounded-but-unbroadcastable corpus (proof tier regime) -> pin a
-        # shuffled-hash join; large corpus (no proof) -> planner's choice,
-        # whose estimates are honest there.
+        # decision is made from that measurement, never from an estimate:
+        # measured-small corpus -> broadcast the vectors (never the pairs);
+        # bounded-but-unbroadcastable corpus (n_rows <=
+        # MEASURED_ATTACH_MAX_ROWS) -> pin a shuffled-hash join; large or
+        # unmeasured corpus -> planner's choice, whose estimates are honest
+        # there.
         lft = slim.select(F.col(id_col).alias("id_l"), F.col(vec_col).alias("_vl"), F.col("_n").alias("_nl"))
         rgt = slim.select(F.col(id_col).alias("id_r"), F.col(vec_col).alias("_vr"), F.col("_n").alias("_nr"))
         est_vec_bytes = None if n_rows is None else n_rows * (8 * dim + 48)
         if est_vec_bytes is not None and est_vec_bytes <= VEC_BROADCAST_BYTES:
             lft, rgt = F.broadcast(lft), F.broadcast(rgt)
-        elif _FALLBACK_HINT and n_rows is not None and n_rows <= GROUPED_TIER_ROWS:
+        elif _FALLBACK_HINT and n_rows is not None and n_rows <= MEASURED_ATTACH_MAX_ROWS:
             lft, rgt = lft.hint(_FALLBACK_HINT), rgt.hint(_FALLBACK_HINT)
         cand = cand.drop("match_key").join(lft, "id_l").join(rgt, "id_r")
     else:

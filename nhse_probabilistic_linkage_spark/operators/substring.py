@@ -28,7 +28,8 @@ from pyspark.sql import functions as F
 from nhse_probabilistic_linkage_spark.functions.suffix import make_lcs_udf
 from nhse_probabilistic_linkage_spark.functions.text import normalize_text
 from nhse_probabilistic_linkage_spark.functions.winnow import with_fingerprints
-from nhse_probabilistic_linkage_spark.operators.lsh import GROUPED_TIER_ROWS, candidate_pairs
+from nhse_probabilistic_linkage_spark.operators.lsh import candidate_pairs
+from nhse_probabilistic_linkage_spark.operators.verify import MEASURED_ATTACH_MAX_ROWS, spread_pairs
 
 # Largest MEASURED doc-table byte size the LCS verify explicitly broadcasts
 # (same rationale as similarity.VEC_BROADCAST_BYTES: decide from facts, not
@@ -123,22 +124,18 @@ def substring_pairs(
         docs = fp.localCheckpoint(eager=False)
     else:
         docs = _cut(fp, "substr_docs")  # durable parquet; count below is a footer read
-    # the count is a PROOF no fingerprint band can exceed it — proven-small
-    # corpora take candidate_pairs' grouped tier (identical output incl.
-    # hot-fingerprint drop accounting)
     n_docs = docs.count()
     # measured corpus bytes for the verify-attach strategy below; only worth
     # a (tiny) second agg over the checkpointed/parquet docs in the small
     # regime — large corpora keep the planner's honest-estimate behavior
     total_chars = None
-    if n_docs <= GROUPED_TIER_ROWS:
+    if n_docs <= MEASURED_ATTACH_MAX_ROWS:
         total_chars = int(
             docs.agg(F.coalesce(F.sum(F.length("norm_text")), F.lit(0))).first()[0]
         )
 
     cands, dropped = candidate_pairs(
-        fingerprint_keys(docs, id_col=id_col), id_col=id_col, band_cap=band_cap,
-        max_band_rows=n_docs,
+        fingerprint_keys(docs, id_col=id_col), id_col=id_col, band_cap=band_cap
     )
     if checkpoint_dir is not None:
         # candidate_pairs already cut the pair table executor-locally; re-stage
@@ -165,18 +162,15 @@ def substring_pairs(
     # fall through to the exact LCS, which remains the decision. Measured
     # at sf1.0: 143,676 winnow candidates -> LCS runs on the overlap
     # survivors only (verify 5.0s -> ~sub-second).
-    from nhse_probabilistic_linkage_spark.operators.verify import spread_pairs
 
     # EXPLICIT attach strategy (r6): the candidate checkpoint's planner
-    # estimate is unreliable (LogicalRDD inherits its origin plan's estimate;
-    # the grouped-tier chain under-estimates), and if the planner broadcasts
-    # the PAIR side instead of the texts, the LCS loses the spread
-    # partitioning (measured 12s -> 15-50s at sf1.0). The doc side's true
-    # size was measured above, so: provably-small text table -> broadcast it
-    # (pinning the design intent — LCS runs in the spread pair partitioning);
-    # bounded-but-unbroadcastable (proof-tier regime) -> pin a shuffled-hash
-    # join (still wide: hash(id) partitioning); large corpus -> planner's
-    # choice over honest estimates, as before.
+    # estimate is unreliable (LogicalRDD inherits its origin plan's estimate,
+    # which can under-estimate), and if the planner broadcasts the PAIR side
+    # instead of the texts, the LCS loses the spread partitioning (measured
+    # 12s -> 15-50s at sf1.0). The doc side's true size was measured above,
+    # so: provably-small text table -> broadcast it (pinning the design
+    # intent — LCS runs in the spread pair partitioning); anything else ->
+    # planner's choice, as before.
     slim_l = slim.select(
         F.col(id_col).alias("id_l"),
         F.col("norm_text").alias("_t_l"),

@@ -45,6 +45,16 @@ def spread_pairs(pairs: DataFrame, factor: int = 2) -> DataFrame:
     return pairs.repartition(n, "id_l", "id_r")
 
 
+# Largest MEASURED corpus row count for which a verify attach (the join of
+# the doc/vector table onto the candidate pairs) picks its join strategy
+# from that measurement instead of the planner's estimate: the pair
+# checkpoint's estimate is unreliable, while a corpus this small is cheap
+# to measure and safe as a hash-join build side. Above it the planner
+# decides over honest estimates. Used by similarity.embedding_neardup_pairs
+# and substring.substring_pairs.
+MEASURED_ATTACH_MAX_ROWS = 65536
+
+
 def no_pushdown(col: F.Column) -> F.Column:
     """Wrap a column expression in a nondeterministic no-op so filters on
     the RESULTING column are never pushed through its projection.

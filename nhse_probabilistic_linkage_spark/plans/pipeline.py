@@ -244,26 +244,9 @@ class DedupPipeline:
             signatures, id_col=self.id_col, bands=cfg.bands, rows_per_band=cfg.rows_per_band
         )
         # the 32x band fanout stays a codegen expression feeding the single
-        # groupBy(band_key) shuffle inside candidate_pairs — never persisted.
-        # The signatures lineage job already counted the corpus (one row per
-        # doc); that count is a PROOF no band can exceed it, so proven-small
-        # corpora take candidate_pairs' grouped tier (no window sort, no
-        # persist, no salt join — identical output incl. drop accounting).
-        # Resumed stages / metrics-off runs report no count -> routed path.
-        # take THIS run's signatures entry (the latest), and only trust a
-        # real count: a resumed stage reports rows=-1, and skipping past it
-        # to an older entry could adopt a stale count from a previous run
-        # on a different input — a false proof, which the fast path's
-        # cap-skip must never receive
-        n_docs = next(
-            (m.rows for m in reversed(self.metrics) if m.stage == "signatures"),
-            None,
-        )
-        if n_docs is not None and n_docs < 0:
-            n_docs = None
+        # band_key shuffle inside candidate_pairs — never persisted
         cands, dropped = candidate_pairs(bands, id_col=self.id_col, band_cap=cfg.band_cap,
-                                         salt_threshold=cfg.salt_threshold, salt_groups=cfg.salt_groups,
-                                         max_band_rows=n_docs)
+                                         salt_threshold=cfg.salt_threshold, salt_groups=cfg.salt_groups)
         pairs = self._materialize(cands, "pairs", manifest, already_cut=True)
         # cheap emptiness probe first — the full count job only runs when a
         # band actually got dropped (rare by construction)

@@ -425,9 +425,7 @@ class IncrementalDedup:
         docs = prepare_docs(new, text_col="text", k=cfg.shingle_k).select("doc_id", "shingles")
         docs = with_minhash(docs, num_perms=cfg.num_perms, seed=cfg.minhash_seed)
         docs = docs.localCheckpoint(eager=True)  # cut lineage; reused 4x below
-        # count over the materialized checkpoint: the 0-row early-exit probe,
-        # and a band-size PROOF for candidate_pairs — micro-batches are small
-        # by construction, so new-x-new takes the grouped tier (r6)
+        # count over the materialized checkpoint: the 0-row early-exit probe
         n_new = docs.count()
         if n_new == 0:
             fs.touch(self.spark, self._commit_marker(batch_id))
@@ -437,10 +435,10 @@ class IncrementalDedup:
         nb = nb.withColumn("bucket", F.pmod("band_key", F.lit(self.n_buckets)).cast("int"))
         nb = nb.localCheckpoint(eager=True)
 
-        # new x new — full skew machinery above the proof tier
+        # new x new — the same cap/salt machinery as the batch pipeline
         nn_cands, _ = candidate_pairs(
             nb, band_cap=cfg.band_cap, salt_threshold=cfg.salt_threshold,
-            salt_groups=cfg.salt_groups, max_band_rows=n_new
+            salt_groups=cfg.salt_groups,
         )
         nn = verify_pairs(nn_cands, docs, threshold=cfg.jaccard_threshold)
 

@@ -128,30 +128,3 @@ def test_band_keys_element_at_identical_to_slice(spark):
     a = sorted(tuple(r) for r in got.collect())
     b = sorted(tuple(r) for r in ref.collect())
     assert a == b
-
-
-def test_grouped_tier_identical_to_routed_with_accounting(spark):
-    """r6 grouped proof tier: with max_band_rows supplied (> band_cap but
-    <= GROUPED_TIER_ROWS), candidate_pairs must produce the exact same pair
-    set, match_keys AND dropped-band accounting as the routed
-    window/persist/salt path — the cap filter and its size accounting are
-    preserved, only the sizing machinery is skipped."""
-    import itertools
-
-    rows = (
-        [(i, 0, 100) for i in range(3)]  # cold band
-        + [(10 + i, 1, 200) for i in range(6)]  # hot band (salted in routed)
-        + [(100 + i, 2, 300) for i in range(12)]  # mega band: over band_cap
-    )
-    bands = spark.createDataFrame(rows, "doc_id long, band_id int, band_key long")
-    routed = candidate_pairs(bands, band_cap=10, salt_threshold=4, salt_groups=3)
-    tier = candidate_pairs(
-        bands, band_cap=10, salt_threshold=4, salt_groups=3, max_band_rows=21
-    )
-    for got_pairs, got_dropped in (routed, tier):
-        got = {(r.id_l, r.id_r, r.match_key) for r in got_pairs.collect()}
-        want = {(a, b, 0) for a, b in itertools.combinations(range(3), 2)} | {
-            (a, b, 1) for a, b in itertools.combinations(range(10, 16), 2)
-        }
-        assert got == want
-        assert [(r.band_key, r.band_size) for r in got_dropped.collect()] == [(300, 12)]

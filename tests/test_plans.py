@@ -119,30 +119,6 @@ def test_url_and_repetition_paths_have_no_python(spark):
     assert "FileScan parquet" in plan
 
 
-def test_semi_join_bands_broadcasts_small_key_lists(spark):
-    """The singleton-band pruning must reach the physical plan as a
-    BROADCAST semi-join at small scale (AQE cannot do this alone for a
-    filter over a cached relation — lsh.semi_join_bands decides explicitly)
-    and stay a shuffle join above the key limit."""
-    from nhse_probabilistic_linkage_spark.operators.lsh import semi_join_bands
-
-    bands = spark.range(0, 20_000).select(
-        F.col("id").alias("doc_id"), F.lit(0).alias("band_id"), F.pmod("id", F.lit(4000)).alias("band_key")
-    )
-    # localCheckpoint makes the key list stats-opaque (LogicalRDD defaults to
-    # a huge size estimate) — the same situation as the production filter
-    # over a cached histogram, where AQE can NOT choose broadcast itself
-    keys = spark.range(0, 100).select(F.col("id").alias("band_key")).localCheckpoint(eager=True)
-    small = semi_join_bands(bands, keys)
-    small.write.format("noop").mode("overwrite").save()
-    assert "BroadcastHashJoin" in _plan(small)
-    # above the limit the EXPLICIT hint is withheld; AQE may still convert at
-    # runtime once it sees the shuffle stage's true size (fine — that path
-    # has runtime stats) — assert the fallback is behaviorally identical
-    fallback = semi_join_bands(bands, keys, broadcast_key_limit=10)
-    assert fallback.count() == small.count() == 500
-
-
 def test_verify_join_does_not_broadcast_docs(spark, small_verify):
     pairs, docs = small_verify
     v = verify_pairs(pairs, docs, threshold=0.7)
@@ -179,6 +155,39 @@ def test_candidate_cold_path_is_joinless_single_shuffle(spark):
     assert "Generate" in plan  # the streaming combination explode
     # and the pair set is exactly the per-band combinations
     assert raw.count() == 1000 * (4 * 3 // 2)
+
+
+def test_candidate_pairs_without_cap_or_salt_prunes_hot_and_drop_branches(spark, monkeypatch):
+    """band_cap=None / salt_threshold=None are constant-false predicates in
+    candidate_pairs' single plan: Catalyst must prune the salted self-join
+    and the drop branch, leaving the cold path's shape — no Join, and only
+    the band_key window shuffle plus the pair-dedup shuffle."""
+    bands = spark.range(0, 4000).select(
+        F.col("id").alias("doc_id"),
+        (F.col("id") % 3).cast("int").alias("band_id"),
+        F.pmod("id", F.lit(1000)).alias("band_key"),
+    )
+    # candidate_pairs returns views over its checkpoint; capture the plan it
+    # actually executed, which is the DataFrame it checkpoints
+    checkpointed = []
+    cls = type(bands)
+    real = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpointed.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    pairs, dropped = candidate_pairs(bands, band_cap=None, salt_threshold=None)
+    plan = _plan(checkpointed[-1])
+    assert "Join" not in plan, plan[:3000]
+    # shuffles that actually ran: query stages of the top-level final plan
+    # (its initial plan re-prints the cached band table's stages)
+    final = plan.split("\n+- == Initial Plan ==")[0]
+    assert final.count("ShuffleQueryStage") <= 2, plan[:3000]
+    assert "Generate" in plan
+    assert pairs.count() == 1000 * (4 * 3 // 2)
+    assert dropped.count() == 0
 
 
 def test_verify_threshold_filter_not_pushed_into_join(spark, small_verify):

@@ -254,3 +254,32 @@ def test_winnow_batch_grouping_invariant():
         assert list(x) == list(y)
     for x, y in zip(g1, g2):
         assert list(x) == list(y)
+
+
+def test_substring_pairs_accounts_bands_over_cap_from_repeated_spans(spark):
+    """Winnowing keeps positions, not values, so a doc that repeats a
+    boilerplate span emits the same fingerprint value many times: a
+    fingerprint band can hold more rows than there are docs. With three docs
+    and band_cap=3, those bands exceed the cap and must come back in
+    `dropped` with their true row counts — never dropped silently."""
+    from collections import Counter
+
+    boiler = "terms and conditions apply to every order placed on this site "
+    rows = [
+        (1, "welcome to the shop " + boiler * 12 + "thanks for visiting"),
+        (2, "a different opening line " + boiler + "and a different close"),
+        (3, "nothing in this document overlaps the others at any length at all"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    min_span, kgram = 64, 16
+    # normalized=True: fingerprints are taken of the text as given, so the
+    # pure-numpy winnowing below sees exactly what the operator sees
+    pairs, dropped = substring_pairs(
+        df, min_span=min_span, kgram=kgram, band_cap=3, normalized=True
+    )
+    counts = Counter()
+    for _, text in rows:
+        counts.update(winnow_fingerprints(text, kgram, min_span - kgram + 1).tolist())
+    want = {(fp, n) for fp, n in counts.items() if n > 3}
+    assert want  # the repeated span really does push bands over the cap
+    assert {(r["band_key"], r["band_size"]) for r in dropped.collect()} == want
