@@ -15,7 +15,8 @@ stream-static interaction that needs multi-step batch logic):
       2. shingle + MinHash the genuinely-new docs (same kernels as batch)
       3. band-join:  new x new   (candidate_pairs — caps/salting included)
                    + new x old   (join against the persisted band store)
-      4. exact-Jaccard verify (shingles of old docs come from the store)
+      4. one exact-Jaccard verify over both candidate sets (shingles of old
+         docs come from the store)
       5. write verified pairs + new signatures + new bands, then commit
 
 The store is three parquet tables under `state_dir`, each partitioned by
@@ -36,6 +37,11 @@ Exactly-once semantics under foreachBatch's at-least-once contract:
     crashed attempt's partial output can never mask its own replay;
   - a commit marker (commits/batch-N, written last via the Hadoop FS API)
     short-circuits replays of fully-committed batches.
+
+Streaming a corpus finds the same verified pairs as the batch detector
+(minhash_lsh_pairs) over all of it while every band stays within
+config.band_cap: the new x old band join applies no cap, and the dropped-band
+table of the new x new candidate_pairs call is not kept.
 
 Clusters are NOT maintained incrementally — connected components is a cheap
 global pass over the (append-only) verified-pairs table; call recluster()
@@ -81,19 +87,13 @@ class IncrementalDedup:
         self.pairs_path = fs.join(state_dir, "pairs")
         self._layout_checked = False
 
-    # -- legacy-state migration -------------------------------------------------
+    # -- store layout and version ---------------------------------------------
     def _tables(self):
         return (
             (self.pairs_path, PAIRS_SCHEMA, ["batch_id"]),
             (self.sigs_path, SIGS_SCHEMA, ["batch_id", "sig_bucket"]),
             (self.bands_path, BANDS_SCHEMA, ["batch_id", "bucket"]),
         )
-
-    @staticmethod
-    def _root_data_files(names: list[str]) -> list[str]:
-        # partitioned layout has only batch_id=N/ children (plus _SUCCESS
-        # markers); bare data files at the root are the legacy layout
-        return [n for n in names if not n.startswith(("_", ".")) and "=" not in n]
 
     def _version_marker(self) -> str:
         return fs.join(self.state_dir, "VERSION")
@@ -107,26 +107,16 @@ class IncrementalDedup:
         return f"layout=1 shingle_hash={SHINGLE_HASH_VERSION} normalize={NORMALIZE_VERSION}"
 
     def _check_layout(self) -> None:
-        """Fail loudly on incompatible state instead of corrupting it:
-        (a) a pre-batch_id layout (root-level data files) breaks parquet
-        partition discovery once partitioned writes land next to it;
-        (b) a store whose persisted shingle/minhash/band values were computed
-        under a DIFFERENT hash representation would simply never collide
-        with new batches — every previously-seen doc silently re-admitted —
-        so a version marker is pinned on first write and enforced after."""
+        """Fail loudly on incompatible state instead of corrupting it: a store
+        whose persisted shingle/minhash/band values were computed under a
+        DIFFERENT hash representation would simply never collide with new
+        batches — every previously-seen doc silently re-admitted — so a
+        version marker is pinned on first write and enforced after. The
+        marker is only ever written into a store with no data yet, so a store
+        holding data but no marker predates it (and possibly the batch_id
+        partition layout too): it is refused untouched."""
         if self._layout_checked:
             return
-        has_data = False
-        legacy_paths: list[str] = []
-        for path, _, _ in self._tables():
-            names = fs.list_names(self.spark, path)
-            has_data = has_data or bool(names)
-            if self._root_data_files(names):
-                legacy_paths.append(path)
-        # VERSION first: it is cheap and TERMINAL. A pre-batch_id store also
-        # predates the marker, and a layout rewrite cannot manufacture hash
-        # compatibility — checking layout first would instruct an expensive
-        # migrate_legacy_state() whose retry still fails here.
         marker = fs.read_text(self.spark, self._version_marker())
         expected = self._expected_version()
         if marker is not None and marker.strip() != expected:
@@ -136,112 +126,18 @@ class IncrementalDedup:
                 "signatures were computed under a different hash "
                 "representation and cannot be mixed — rebuild the state dir."
             )
-        if marker is None and has_data:
-            hint = (
-                " The store additionally uses the legacy non-partitioned "
-                "layout; if you can attest it was written with the CURRENT "
-                "hash representation, migrate_legacy_state(attested_version="
-                f"'{expected}') rewrites the layout AND records the marker."
-                if legacy_paths
-                else ""
-            )
-            raise RuntimeError(
-                f"streaming state at {self.state_dir} has no VERSION marker: "
-                "it was written by an engine release with a different "
-                f"shingle-hash representation (current: '{expected}'). "
-                "Stored signatures cannot be compared with new ones — "
-                "rebuild the state dir (re-run the stream from scratch) "
-                "or keep processing with the old release." + hint
-            )
-        if legacy_paths:
-            # marker present and matching — only the layout needs rewriting
-            raise RuntimeError(
-                f"legacy (non-partitioned) streaming state at {legacy_paths[0]}: "
-                "this store predates the batch_id/bucket partition layout. "
-                "Run migrate_legacy_state() once to rewrite it in place, "
-                "then retry."
-            )
         if marker is None:
+            if any(fs.list_names(self.spark, path) for path, _, _ in self._tables()):
+                raise RuntimeError(
+                    f"streaming state at {self.state_dir} has no VERSION marker: "
+                    "it was written by an engine release with a different "
+                    f"shingle-hash representation (current: '{expected}'). "
+                    "Stored signatures cannot be compared with new ones — "
+                    "rebuild the state dir (re-run the stream from scratch) "
+                    "or keep processing with the old release."
+                )
             fs.write_text(self.spark, self._version_marker(), expected)
         self._layout_checked = True
-
-    def migrate_legacy_state(
-        self, legacy_batch_id: int = -1, attested_version: str | None = None
-    ) -> None:
-        """One-time in-place rewrite of a pre-batch_id state dir into the
-        partitioned layout. Legacy rows get batch_id=`legacy_batch_id` (never
-        a real batch id, so batch-exclusion reads always keep them) and the
-        bucket columns are derived exactly as the writer derives them.
-
-        Hash-compatibility gate: migration rewrites the LAYOUT, it cannot fix
-        an incompatible shingle-hash representation. A store with a VERSION
-        marker must match the current engine (else refuse up front, before the
-        expensive rewrite). A store WITHOUT a marker (true pre-marker legacy)
-        requires the caller to attest, via `attested_version`, that it was
-        written under the current representation; a successful migration then
-        records the marker so the next _check_layout passes."""
-        expected = self._expected_version()
-        marker = fs.read_text(self.spark, self._version_marker())
-        if marker is not None:
-            if marker.strip() != expected:
-                raise RuntimeError(
-                    f"refusing to migrate {self.state_dir}: store version "
-                    f"'{marker.strip()}' != engine '{expected}'. A layout "
-                    "rewrite cannot make the stored hashes comparable — "
-                    "rebuild the state dir instead."
-                )
-        elif attested_version != expected:
-            raise RuntimeError(
-                f"refusing to migrate {self.state_dir}: the store has no "
-                "VERSION marker, so its shingle-hash provenance is unknown. "
-                "If (and only if) it was produced under the current "
-                f"representation, pass attested_version='{expected}' to "
-                "attest that; otherwise rebuild the state dir — migrating "
-                "incompatible hashes would silently re-admit every "
-                "previously-seen document."
-            )
-        for path, schema, parts in self._tables():
-            if not self._root_data_files(fs.list_names(self.spark, path)):
-                continue  # already partitioned (or absent)
-            df = self.spark.read.schema(schema).parquet(path)
-            df = df.withColumn(
-                "batch_id", F.coalesce(F.col("batch_id"), F.lit(legacy_batch_id)).cast("long")
-            )
-            if "sig_bucket" in parts:
-                df = df.withColumn(
-                    "sig_bucket",
-                    F.coalesce(
-                        F.col("sig_bucket"),
-                        F.pmod("doc_id", F.lit(self.n_buckets)).cast("int"),
-                    ),
-                )
-            if "bucket" in parts:
-                df = df.withColumn(
-                    "bucket",
-                    F.coalesce(
-                        F.col("bucket"),
-                        F.pmod("band_key", F.lit(self.n_buckets)).cast("int"),
-                    ),
-                )
-            tmp = path + ".migrating"
-            fs.delete(self.spark, tmp, recursive=True)
-            df.write.mode("overwrite").partitionBy(*parts).parquet(tmp)
-            fs.delete(self.spark, path, recursive=True)
-            # Hadoop rename reports many failures via a false RETURN, not an
-            # exception — unchecked, a failed rename here would strand the
-            # data in .migrating and silently empty the store
-            if not fs.rename(self.spark, tmp, path):
-                raise RuntimeError(
-                    f"migration rename failed: data preserved at {tmp}, "
-                    f"target {path} is currently absent — move it into place "
-                    "manually and retry"
-                )
-        # success: record the (now attested) version, making the migration
-        # path actually usable — without this, the retry after a pre-marker
-        # migration would still die on the no-VERSION-marker check
-        if marker is None:
-            fs.write_text(self.spark, self._version_marker(), expected)
-        self._layout_checked = False
 
     # -- state compaction -------------------------------------------------------
     # The store grows one batch_id=N partition set per micro-batch forever; a
@@ -262,7 +158,7 @@ class IncrementalDedup:
     # step is idempotent (deletes of missing dirs no-op, the rename is
     # skipped once applied), and the new generation always contains the
     # prior one's rows, so no crash window can lose or duplicate state.
-    COMPACTED_BATCH_ID = -2  # never a real foreachBatch id; != legacy -1
+    COMPACTED_BATCH_ID = -2  # never a real foreachBatch id (those are >= 0)
 
     def _compaction_marker(self) -> str:
         return fs.join(self.state_dir, "compaction.READY")
@@ -391,7 +287,7 @@ class IncrementalDedup:
         replay re-writes, but a replay that takes an early exit (e.g. every
         doc turns out to be already seen) writes nothing — the leftovers
         must still disappear or they'd be stranded junk rows forever."""
-        for path in (self.pairs_path, self.sigs_path, self.bands_path):
+        for path, _, _ in self._tables():
             fs.delete(self.spark, fs.join(path, f"batch_id={batch_id}"), recursive=True)
 
     # -- the micro-batch body ---------------------------------------------------
@@ -410,11 +306,8 @@ class IncrementalDedup:
         # exclude the current batch_id from all state reads: a crashed prior
         # attempt of THIS batch may have left partial rows that the dynamic
         # overwrite below is about to replace — they must not count as "seen".
-        # NULL batch_id (a state dir written before the batch_id column
-        # existed) is committed history: coalesce to -1 so the inequality is
-        # TRUE, not NULL — a bare `!=` would silently drop all legacy rows
-        # from the history scans and re-admit previously-seen docs.
-        not_this_batch = F.coalesce(F.col("batch_id"), F.lit(-1)) != F.lit(batch_id)
+        # batch_id is a partition column of every table, so it is never NULL.
+        not_this_batch = F.col("batch_id") != F.lit(batch_id)
         old_sigs = self.stored_sigs().where(not_this_batch)
         new = (
             batch.select("doc_id", "text")
@@ -424,10 +317,10 @@ class IncrementalDedup:
 
         docs = prepare_docs(new, text_col="text", k=cfg.shingle_k).select("doc_id", "shingles")
         docs = with_minhash(docs, num_perms=cfg.num_perms, seed=cfg.minhash_seed)
-        docs = docs.localCheckpoint(eager=True)  # cut lineage; reused 4x below
-        # count over the materialized checkpoint: the 0-row early-exit probe
-        n_new = docs.count()
-        if n_new == 0:
+        # cut lineage (reused 3x below). The cut is LAZY: the 0-row early-exit
+        # count is its first consumer, so one job materializes and counts
+        docs = docs.localCheckpoint(eager=False)
+        if docs.count() == 0:
             fs.touch(self.spark, self._commit_marker(batch_id))
             return
 
@@ -440,7 +333,6 @@ class IncrementalDedup:
             nb, band_cap=cfg.band_cap, salt_threshold=cfg.salt_threshold,
             salt_groups=cfg.salt_groups,
         )
-        nn = verify_pairs(nn_cands, docs, threshold=cfg.jaccard_threshold)
 
         # new x old — bucket-pruned scan of the band history
         touched = [r["bucket"] for r in nb.select("bucket").distinct().collect()]
@@ -459,11 +351,12 @@ class IncrementalDedup:
             # the verify join
             .localCheckpoint(eager=True)
         )
-        # verify against mixed sides: shingles live in the batch for new ids,
-        # in the store for old ids. The store scan is pruned to the id
-        # buckets that actually appear in a candidate pair — without this,
-        # every micro-batch would re-read the ENTIRE signature history just
-        # to verify a handful of cross-batch pairs (the semi-join inside
+        # one verify over new x new AND new x old, so the doc side is
+        # exchanged once: shingles live in the batch for new ids, in the
+        # store for old ids. The store scan is pruned to the id buckets that
+        # actually appear in a new x old pair — without this, every
+        # micro-batch would re-read the ENTIRE signature history just to
+        # verify a handful of cross-batch pairs (the semi-join inside
         # verify_pairs reduces the shuffle, not the scan).
         touched_sig = [
             r["b"]
@@ -480,11 +373,9 @@ class IncrementalDedup:
             .select("doc_id", "shingles")
         )
         all_sh = docs.select("doc_id", "shingles").unionByName(old_sh)
-        no = verify_pairs(no_cands, all_sh, threshold=cfg.jaccard_threshold)
-
-        out = nn.unionByName(no).select(
-            "id_l", "id_r", F.col("match_key").cast("int").alias("match_key"), "jaccard"
-        )
+        out = verify_pairs(
+            nn_cands.unionByName(no_cands), all_sh, threshold=cfg.jaccard_threshold
+        ).select("id_l", "id_r", F.col("match_key").cast("int").alias("match_key"), "jaccard")
         self._write_batch(out, self.pairs_path, batch_id, ["batch_id"])
         self._write_batch(
             docs.select(
@@ -531,20 +422,19 @@ class IncrementalDedup:
         assignment (see operators.connected_components.
         incremental_assign_components): per-call CC cost is O(new edges),
         not O(full history) — output identical to recluster() (test-pinned
-        over a 10-batch stream). Caller tracks the last folded batch id;
-        legacy rows with NULL batch_id count as batch -1 (committed history,
-        same convention as process_batch's state reads). Ordering with
-        compact(): compaction rewrites every stored batch to generation -2,
-        so fold all outstanding batches BEFORE compacting (or re-seed with a
-        full recluster() after) — edges folded into -2 are invisible to a
-        later `> since_batch` filter by design, not lost from state."""
+        over a 10-batch stream). Caller tracks the last folded batch id.
+        Ordering with compact(): compaction rewrites every stored batch to
+        generation -2, so fold all outstanding batches BEFORE compacting (or
+        re-seed with a full recluster() after) — edges folded into -2 are
+        invisible to a later `> since_batch` filter by design, not lost from
+        state."""
         from nhse_probabilistic_linkage_spark.operators.connected_components import (
             incremental_assign_components,
         )
 
         new_edges = (
             self.verified_pairs()
-            .where(F.coalesce(F.col("batch_id"), F.lit(-1)) > F.lit(since_batch))
+            .where(F.col("batch_id") > F.lit(since_batch))
             .select(F.col("id_l").alias("src"), F.col("id_r").alias("dst"))
         )
         return incremental_assign_components(

@@ -42,19 +42,31 @@ def test_incremental_matches_batch(spark, corpus, tmp_path_factory):
     batch_pairs, _ = minhash_lsh_pairs(corpus, CFG)
     assert _pairset(inc.verified_pairs()) == _pairset(batch_pairs)
 
+    # the stored values, not just the pair ids: match_key (first colliding
+    # band) and exact jaccard equal the batch detector's
+    def rows(df):
+        return sorted(
+            map(
+                tuple,
+                df.select(
+                    "id_l", "id_r", F.col("match_key").cast("int"), "jaccard"
+                ).collect(),
+            )
+        )
+
+    assert rows(inc.verified_pairs()) == rows(batch_pairs)
+
     # cluster ASSIGNMENTS over the streamed pairs equal the batch pipeline's
     # (same CC over the same edge set -> identical membership)
     from nhse_probabilistic_linkage_spark.operators.connected_components import (
         assign_components,
     )
-    from pyspark.sql import functions as F2
-
     streamed = {(r["doc_id"], r["cluster_id"]) for r in inc.recluster().collect()}
     batch = {
         (r["doc_id"], r["cluster_id"])
         for r in assign_components(
             corpus.select("doc_id"),
-            batch_pairs.select(F2.col("id_l").alias("src"), F2.col("id_r").alias("dst")),
+            batch_pairs.select(F.col("id_l").alias("src"), F.col("id_r").alias("dst")),
         ).collect()
     }
     assert streamed == batch
@@ -91,65 +103,34 @@ def _flatten_to_legacy(spark, state):
     os.remove(os.path.join(state, "commits", "batch-0"))
 
 
-def test_legacy_state_detected_and_migrated(spark, corpus, tmp_path_factory):
-    """A state dir written before the batch_id/bucket partition layout must
-    (a) be refused loudly — writing batch_id=N/ dirs next to root-level data
-    files corrupts partition discovery — and (b) after migrate_legacy_state()
-    count as committed history, so previously-seen docs are NOT re-admitted
-    (a bare `batch_id != N` filter would evaluate NULL on legacy rows and
-    silently drop the whole prior history)."""
-    state = str(tmp_path_factory.mktemp("state"))
-    inc = IncrementalDedup(spark, state, CFG)
-    half = corpus.limit(200)
-    inc.process_batch(half, 0)
-    n_sigs = inc.stored_sigs().count()
-    n_pairs = inc.verified_pairs().count()
-
-    _flatten_to_legacy(spark, state)
-    # a REAL legacy store also predates the VERSION marker — remove it so the
-    # test exercises the actual migration path, not a hand-flattened modern
-    # store that happens to carry the marker already
-    os.remove(os.path.join(state, "VERSION"))
-    assert "batch_id" not in spark.read.parquet(os.path.join(state, "sigs")).columns
-
-    fresh = IncrementalDedup(spark, state, CFG)
-    # the version check runs FIRST (terminal; a layout rewrite can't fix an
-    # incompatible hash representation) and names the attestation escape hatch
-    with pytest.raises(RuntimeError, match="VERSION marker.*attested_version"):
-        fresh.process_batch(half, 1)
-    # unattested migration of a marker-less store must refuse up front
-    with pytest.raises(RuntimeError, match="attest"):
-        fresh.migrate_legacy_state()
-    fresh.migrate_legacy_state(attested_version=fresh._expected_version())
-    # migration recorded the attested version — the retry passes _check_layout
-    assert os.path.exists(os.path.join(state, "VERSION"))
-    # redeliver the same docs under a new batch id: all already seen -> the
-    # store must not grow and no new-batch rows may be admitted
-    fresh.process_batch(half, 1)
-    sigs = fresh.stored_sigs()
-    assert sigs.count() == n_sigs
-    assert sigs.where(F.col("batch_id") == 1).count() == 0
-    assert fresh.verified_pairs().count() == n_pairs
-
-
-def test_legacy_layout_with_matching_marker_migrates_unattested(
-    spark, corpus, tmp_path_factory
-):
-    """When the VERSION marker exists and matches, only the layout needs a
-    rewrite — migrate_legacy_state() needs no attestation."""
+def test_pre_batch_id_store_is_refused_untouched(spark, corpus, tmp_path_factory):
+    """A store from before the batch_id/bucket partition layout also predates
+    the VERSION marker. It must be refused loudly — its hash provenance is
+    unknown, and writing batch_id=N/ dirs next to root-level data files would
+    corrupt partition discovery — and left exactly as it was: no marker
+    written, no partition dir created."""
     state = str(tmp_path_factory.mktemp("state"))
     inc = IncrementalDedup(spark, state, CFG)
     few = corpus.limit(50)
     inc.process_batch(few, 0)
-    n_sigs = inc.stored_sigs().count()
-    _flatten_to_legacy(spark, state)  # marker left in place
+    _flatten_to_legacy(spark, state)
+    os.remove(os.path.join(state, "VERSION"))
 
+    def listing():
+        return sorted(
+            os.path.relpath(os.path.join(d, n), state)
+            for d, dirs, files in os.walk(state)
+            for n in dirs + files
+        )
+
+    before = listing()
     fresh = IncrementalDedup(spark, state, CFG)
-    with pytest.raises(RuntimeError, match="legacy"):
+    with pytest.raises(RuntimeError, match="VERSION marker"):
         fresh.process_batch(few, 1)
-    fresh.migrate_legacy_state()
-    fresh.process_batch(few, 1)  # all already seen
-    assert fresh.stored_sigs().count() == n_sigs
+    after = listing()
+    assert after == before
+    assert "VERSION" not in after
+    assert not any("batch_id=" in p for p in after)
 
 
 def test_readstream_available_now(spark, corpus, tmp_path_factory):
