@@ -1,9 +1,8 @@
-"""Decontamination, stratified quota cap, and PII redaction."""
+"""Decontamination and stratified quota cap."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from nhse_probabilistic_linkage_spark.functions.redact import pii_counts, redact_pii
 from nhse_probabilistic_linkage_spark.functions.sampling import stratified_cap
 from nhse_probabilistic_linkage_spark.operators.decontaminate import (
     contamination_hits,
@@ -77,42 +76,3 @@ def test_stratified_cap_rejects_bad_quota(spark):
     with pytest.raises(ValueError):
         stratified_cap(df, "source", quota=0)
 
-
-def test_redact_pii_counts_and_replacement(spark):
-    rows = [
-        (1, "reach me at john.doe+spam@example.co.uk or 10.1.2.3 ref 123456789012"),
-        (2, "no pii here just the year 2026 and a count of 42"),
-        (3, "two mails a@b.io c@d.org and ip 192.168.0.1"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in redact_pii(df).collect()}
-    assert (out[1]["pii_email"], out[1]["pii_ipv4"], out[1]["pii_digitrun"]) == (1, 1, 1)
-    assert (out[2]["pii_email"], out[2]["pii_ipv4"], out[2]["pii_digitrun"]) == (0, 0, 0)
-    assert (out[3]["pii_email"], out[3]["pii_ipv4"]) == (2, 1)
-    assert out[2]["text_redacted"] == out[2]["text"]  # clean text untouched
-    red = out[1]["text_redacted"]
-    assert "@" not in red and "10.1.2.3" not in red and "123456789012" not in red
-    assert red.count("<PII>") == 3
-
-
-def test_redaction_matches_duckdb_oracle(spark):
-    """The exact patterns replay in RE2 (DuckDB) — the cross-engine contract
-    the driver oracle for q75/q76 relies on."""
-    duckdb = pytest.importorskip("duckdb")
-    from nhse_probabilistic_linkage_spark.functions.redact import PII_PATTERNS
-
-    texts = [
-        "mail x_1%a@sub.domain.net then 8.8.8.8 and 999888777666555",
-        "edge: a@b.cd 1.2.3.4.5 12345678 123456789",
-        "nothing",
-    ]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, text string")
-    got = {
-        r["i"]: {k: r[k] for k in ("pii_email", "pii_ipv4", "pii_digitrun")}
-        for r in df.select("i", *[e.alias(n) for n, e in pii_counts("text").items()]).collect()
-    }
-    con = duckdb.connect()
-    for i, t in enumerate(texts):
-        for kind, pat in PII_PATTERNS.items():
-            n = con.execute("SELECT len(regexp_extract_all(?, ?))", [t, pat]).fetchone()[0]
-            assert got[i][f"pii_{kind}"] == n, (i, kind, t)
