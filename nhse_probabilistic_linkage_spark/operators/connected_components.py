@@ -19,17 +19,17 @@ centered at each component's minimum id. Each round is two shuffles
 localCheckpoint() — the reference's `break_lineage_method` lesson
 (predict_dedupe.py:63-69) applied to an iterative loop.
 
-The hybrid part (since r4): once the always-counted frontier is at most
-`local_finish_edges` (default 1M — which means any input graph that small,
-i.e. every current bench/test scale, finishes driver-side in ONE collect),
-the remaining rounds collapse into a numpy union-find with a hard,
-caller-controlled memory bound. This differs from the reference's collect
-in exactly one way that matters: the bound. The reference collects
-WHATEVER the edge count is; we collect only when the frontier is under an
-explicit threshold, the early rounds of a big graph still run fully
-distributed, and `local_finish_edges=0` restores the pure distributed
-loop. Output is pinned identical between the two paths
-(tests/test_connected_components.py).
+The hybrid part: a graph of at most `local_finish_edges` oriented edges
+(default 1M — every current bench/test scale) is collected once, before any
+dedup shuffle, and finished on the driver by a numpy FastSV kernel
+(`_fastsv`); a larger graph runs star rounds until its frontier fits under
+the same bound, then finishes the same way. The driver's memory bound is
+hard and caller-controlled. This differs from the reference's collect in
+exactly one way that matters: the bound. The reference collects WHATEVER
+the edge count is; we collect only under an explicit threshold, the early
+rounds of a big graph still run fully distributed, and
+`local_finish_edges=0` restores the pure distributed loop. Output is pinned
+identical between the paths (tests/test_connected_components.py).
 """
 
 from __future__ import annotations
@@ -38,16 +38,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _oriented(edges: DataFrame) -> DataFrame:
+    """Orient big->small, drop self-loops."""
+    return edges.select(
+        F.greatest("src", "dst").alias("src"),
+        F.least("src", "dst").alias("dst"),
+    ).where(F.col("src") != F.col("dst"))
+
+
 def _canonical(edges: DataFrame) -> DataFrame:
     """Orient big->small, drop self-loops, dedup."""
-    return (
-        edges.select(
-            F.greatest("src", "dst").alias("src"),
-            F.least("src", "dst").alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    return _oriented(edges).distinct()
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -79,66 +80,77 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
+def _fastsv(src, dst):
+    """Connected components of the undirected (src, dst) int64 edge arrays
+    -> (ids, component) arrays: every endpoint id once, ascending, labelled
+    with the min id of its component.
+
+    FastSV (Zhang, Azad & Hu, SIAM PP 2020) over both edge directions, as a
+    few vectorized numpy passes per round: stochastic hooking
+    f[f[u]] <- min gf[v], aggressive hooking f[u] <- min gf[v], shortcutting
+    f[u] <- min(f[u], gf[u]), until the grandparent vector gf = f[f] stops
+    changing. Ids are factorized with np.unique, which sorts them, so a min
+    over codes is a min over ids and each component's label is its min
+    member id. Rounds grow with log(diameter), not the diameter, so a long
+    path in random id order finishes in tens of rounds where min-label
+    propagation would need one round per hop. Duplicate, reversed and self
+    edges are absorbed."""
+    import numpy as np
+
+    uniq, codes = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    left, right = codes[: len(src)], codes[len(src):]
+    f = np.arange(len(uniq), dtype=np.int64)
+    gf = f
+    while True:
+        f_next = f.copy()
+        # one direction at a time: half-length temporaries, no reversed copy
+        for u, v in ((left, right), (right, left)):
+            gfv = gf[v]
+            np.minimum.at(f_next, f[u], gfv)
+            np.minimum.at(f_next, u, gfv)
+        f = np.minimum(f_next, gf)
+        grand = f[f]
+        if np.array_equal(grand, gf):
+            break
+        gf = grand
+
+    # flatten to roots with vectorized pointer jumping (O(log n) passes)
+    while True:
+        grand = f[f]
+        if np.array_equal(grand, f):
+            break
+        f = grand
+    return uniq, uniq[f]
+
+
 def _local_finish(edges: DataFrame) -> DataFrame:
-    """Finish a small frontier with a driver-side union-find over numpy arrays.
+    """Finish a small edge set on the driver with the numpy FastSV kernel.
 
     Star rounds shrink the frontier geometrically, so the LAST few rounds of
     the distributed loop run over a tiny edge set where each round's cost is
-    pure job-scheduling latency (measured: CC is the only pipeline stage
-    under 2x T1->T4 scaling, entirely from these tail rounds). Once the
-    frontier fits comfortably on the driver we collapse the remaining
-    O(log n) rounds into one collect + union-find. Both star operations
-    preserve the node set and the component partition, so the union-find over
-    an intermediate frontier yields exactly the same (id, component=min id)
-    assignment the distributed loop converges to.
+    pure job-scheduling latency. Once the edges fit comfortably on the
+    driver we collapse the remaining rounds into one collect + _fastsv. Both
+    star operations preserve the node set and the component partition, and
+    the kernel absorbs duplicate and reversed edges, so any of the raw
+    oriented edges, the canonical round-0 frontier or an intermediate
+    frontier yields exactly the same (id, component=min id) assignment the
+    distributed loop converges to.
 
-    Memory: ids are factorized once (np.unique) and the union-find runs over
-    an int64 parent ARRAY — ~24 B/edge of numpy state at the worst case of
-    2 fresh nodes per edge (no per-node Python objects; the r4 dict-based
-    variant boxed every id). At the 1M-edge default that is ~48 MB of
-    arrays; the dominant transient is the Arrow->pandas collect of the edge
-    list itself (~two int64 columns + copy, ~35 MB). The path is bounded by
-    the caller's `local_finish_edges` and disabled with 0."""
+    Memory: a tracemalloc probe of _fastsv over 1M random int64 edges
+    measured a numpy peak of ~120 B/edge (~120 MB) at the worst case of two
+    fresh ids per edge, and ~100 B/edge over 300k distinct ids. np.unique
+    alone peaks at ~114 B/edge on the worst case, so its sort workspace over
+    the 2M concatenated endpoints sets the bound. On top comes the
+    Arrow->pandas collect of the two int64 edge columns. The path is bounded
+    by the caller's `local_finish_edges` and disabled with 0."""
     import numpy as np
     import pandas as pd
 
     pdf = edges.select(
         F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
     ).toPandas()
-    src = pdf["src"].to_numpy(dtype=np.int64)
-    dst = pdf["dst"].to_numpy(dtype=np.int64)
-    # np.unique returns ids SORTED ascending, so index order == id order and
-    # union-by-min-INDEX below is exactly union-by-min-id: the root of every
-    # tree stays the set minimum, and the final component id is the min id
-    # the star algorithm converges to
-    uniq, codes = np.unique(np.concatenate([src, dst]), return_inverse=True)
-    left, right = codes[: len(src)], codes[len(src):]
-    parent = np.arange(len(uniq), dtype=np.int64)
-
-    def find(x: int) -> int:
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:  # path compression
-            parent[x], x = int(root), int(parent[x])
-        return int(root)
-
-    for a, b in zip(left.tolist(), right.tolist()):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            if ra < rb:
-                parent[rb] = ra
-            else:
-                parent[ra] = rb
-
-    # flatten to roots with vectorized pointer jumping (O(log n) passes)
-    while True:
-        grand = parent[parent]
-        if np.array_equal(grand, parent):
-            break
-        parent = grand
-
-    out = pd.DataFrame({"id": uniq, "component": uniq[parent]})
+    ids, comps = _fastsv(pdf["src"].to_numpy(dtype=np.int64), pdf["dst"].to_numpy(dtype=np.int64))
+    out = pd.DataFrame({"id": ids, "component": comps})
     return edges.sparkSession.createDataFrame(out, "id bigint, component bigint")
 
 
@@ -165,20 +177,23 @@ def connected_components(
     edge are returned; callers union isolated nodes back (see
     assign_components).
 
-    `local_finish_edges`: once the (always-counted) frontier has at most this
-    many edges, the remaining rounds collapse into one driver-side union-find
-    (see _local_finish) — identical output, minus the scheduling-latency-bound
-    tail rounds. NOTE the default's reach: any input graph of <= 1M edges
-    (every current bench/test scale) therefore finishes with a driver-side
-    collect after round counting — a deliberate hybrid, not the pure
-    distributed loop the module used pre-r4. Library callers who must never
-    collect edges on the driver should pass 0 (pure distributed loop,
-    pinned-identical output). At 10^12-node scale the early rounds still run
-    fully distributed; the threshold only bounds what the driver is ever
-    asked to hold (numpy arrays, ~24 B/edge worst case plus the Arrow
-    collect of the two int64 edge columns).
+    `local_finish_edges`: an input of at most this many oriented edges
+    (self-loops dropped, duplicates and reversed copies still counted) is
+    collected once and finished on the driver by the numpy FastSV kernel
+    (see _local_finish), before the dedup shuffle and the round checksum. A
+    larger input pays one extra count job, then runs distributed star rounds
+    until its frontier has at most this many edges, and finishes the same
+    way. Output is identical to the pure distributed loop either way. NOTE
+    the default's reach: any input graph of <= 1M edges (every current
+    bench/test scale) finishes with a driver-side collect — a deliberate
+    hybrid. Library callers who must never collect edges on the driver
+    should pass 0 (pure distributed loop, pinned-identical output). At
+    10^12-node scale the early rounds still run fully distributed; the
+    threshold only bounds what the driver is ever asked to hold (numpy
+    arrays, ~120 B/edge peak, plus the Arrow collect of the two int64 edge
+    columns).
 
-    Frontier durability: by default each round is cut with an eager
+    Frontier durability: by default each round is cut with a
     localCheckpoint — fast, but executor-LOCAL (an executor loss kills the
     job and pins executor memory for the run). When `checkpoint_dir` is set,
     rounds stage to parquet under it instead (round files alternate between
@@ -189,9 +204,9 @@ def connected_components(
 
     def _cut(df: DataFrame, rnd: int) -> DataFrame:
         if checkpoint_dir is None:
-            # lazy: the checksum job that immediately follows every cut is
-            # the first consumer, so one job materializes AND fingerprints
-            # the frontier (r6; was eager + a second full scan per round)
+            # lazy: the count or checksum job that immediately follows every
+            # cut is its first consumer, so one job materializes AND
+            # measures the frontier
             return df.localCheckpoint(eager=False)
         from nhse_probabilistic_linkage_spark.sources import fs
 
@@ -199,8 +214,19 @@ def connected_components(
         df.write.mode("overwrite").parquet(path)
         return df.sparkSession.read.parquet(path)
 
-    cur = _canonical(edges.select(F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")))
-    cur = _cut(cur, 0)
+    cur = _oriented(edges.select(F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")))
+    if local_finish_edges > 0:
+        # slot 1: above the threshold, round 0 below writes slot 0 while
+        # reading this cut
+        cur = _cut(cur, 1)
+        n_raw = cur.count()
+        if n_raw == 0:
+            return cur.sparkSession.createDataFrame([], "id bigint, component bigint")
+        if n_raw <= local_finish_edges:
+            # _fastsv absorbs duplicate and reversed edges, so a graph the
+            # driver finishes anyway skips the dedup shuffle and checksum
+            return _local_finish(cur)
+    cur = _cut(cur.distinct(), 0)
     prev_sig = _checksum(cur)
     if prev_sig[0] == 0:
         return cur.sparkSession.createDataFrame([], "id bigint, component bigint")
