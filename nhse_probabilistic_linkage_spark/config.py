@@ -10,7 +10,7 @@ JSON round-trip so a run manifest can pin the exact detector config.
 from __future__ import annotations
 
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -59,11 +59,7 @@ class DedupConfig:
     # substr_max_chars of each doc — documented recall bound, never a stall.
     # None disables.
     substr_max_chars: int | None = 50_000
-    simhash_bits: int = 64
     simhash_max_hamming: int = 3
-    # Close-match window for canonical-doc election (reference analog:
-    # CLOSE_MATCHES_THRESHOLD=5, /root/reference/parameters_dedupe.py:23-24).
-    close_match_window: float = 0.05
     # MinHash-estimate pre-gate for the exact-Jaccard verify join: drop
     # candidate pairs whose signature-agreement estimate falls below
     # jaccard_threshold - verify_estimate_band BEFORE the wide shingle
@@ -88,7 +84,6 @@ class DedupConfig:
     verify_estimate_gate: bool | None = None
     verify_estimate_band: float = 0.15
     verify_gate_min_avg_shingles: int = 4096
-    extra: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:
         if self.bands * self.rows_per_band != self.num_perms:

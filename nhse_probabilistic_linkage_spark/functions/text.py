@@ -14,7 +14,7 @@ stays inside whole-stage codegen and Catalyst can prune/push down around it:
                   ~900-token docs: ~35% faster at BOTH 1 and 4 threads
                   (string building dominated the old prepare stage).
                   String shingles remain available for debugging/display
-                  (`shingles()`, `keep_shingle_strings=True`).
+                  (`shingles()`).
 
 Determinism note: xxhash64 with the default seed (42) is a fixed, versioned
 function of its input — unlike monotonically_increasing_id, which the
@@ -106,7 +106,7 @@ def windowed_shingle_hashes(token_hash_col: Column, k: int = 5) -> Column:
     )
 
 
-def prepare_docs(df, text_col: str = "text", k: int = 5, keep_shingle_strings: bool = False):
+def prepare_docs(df, text_col: str = "text", k: int = 5):
     """Attach `shingles` (array<bigint>) to a document DataFrame.
 
     Tokenization and per-token hashing stay native (cheap — measured 0.7s of
@@ -115,23 +115,10 @@ def prepare_docs(df, text_col: str = "text", k: int = 5, keep_shingle_strings: b
     BIT-IDENTICAL to the native `windowed_shingle_hashes` expression (pinned
     in tests/test_text.py) and removes the per-window slice allocation that
     dominated the stage (r6: 7.6s -> sub-second short docs, 24s -> ~2s long
-    docs). The token array is materialized as its own projection step where
-    the string-shingle debug path needs to reference it more than once
-    (lambda-bearing expressions are opaque to codegen subexpression
-    elimination — see with_textstats)."""
+    docs)."""
     from nhse_probabilistic_linkage_spark.functions.shingle_kernel import make_shingle_udf
 
     shingle_udf = make_shingle_udf(k)
-    if keep_shingle_strings:
-        return (
-            df.withColumn("_toks", tokenize(F.col(text_col)))
-            .withColumn(
-                "shingles",
-                shingle_udf(F.transform(F.col("_toks"), lambda t: F.xxhash64(t))),
-            )
-            .withColumn("shingle_strings", shingles(F.col("_toks"), k))
-            .drop("_toks")
-        )
     return df.withColumn(
         "shingles",
         shingle_udf(F.transform(tokenize(F.col(text_col)), lambda t: F.xxhash64(t))),

@@ -215,19 +215,6 @@ def doc_fingerprint(text: Column | str) -> Column:
     return F.xxhash64(normalize_text(text))
 
 
-def rolling_min_fingerprints(text: Column | str, k: int = 16, n: int = 4) -> Column:
-    """Winnowing-style robust fingerprint: the n smallest hashes over the
-    char k-gram rolling window of the normalized text. Survives small edits
-    anywhere outside the selected windows."""
-    c = normalize_text(text)
-    n_chars = F.length(c)
-    grams = F.when(
-        n_chars >= k,
-        F.transform(F.sequence(F.lit(1), n_chars - k + 1), lambda i: F.xxhash64(c.substr(i, F.lit(k)))),
-    ).otherwise(F.array(F.xxhash64(c)))
-    return F.slice(F.array_sort(F.array_distinct(grams)), 1, n)
-
-
 def with_textstats(df, text_col: str = "text"):
     """All stats in one pass over a SINGLE tokenization.
 
@@ -238,8 +225,7 @@ def with_textstats(df, text_col: str = "text"):
     inside lang_id alone). Interleaved A/B at sf0.1, local[8]: 1.38s
     inlined vs 0.92s shared (~1.5x), identical output. CollapseProject
     keeps non-cheap multi-referenced aliases in separate Projects, so
-    `_toks` evaluates exactly once (same technique as
-    functions.text.prepare_docs)."""
+    `_toks` evaluates exactly once."""
     t = F.col(text_col)
     toks = F.col("_toks")
     # every expensive stat the composite quality re-uses is additionally

@@ -7,7 +7,7 @@ break_lineage_method='persist'|'delta_lake_table',
 /root/reference/predict_dedupe.py:63-69):
 
   prepare    pages -> (doc_id, url, shingles, n_shingles)   [native]
-  signatures + minhash (Arrow UDF), + simhash (Arrow UDF)
+  signatures + minhash (Arrow UDF)
   pairs      LSH bands -> capped self-join -> candidates    [shuffle: band_key]
   verified   exact Jaccard >= threshold                     [shuffle: doc_id]
   clusters   connected components + singleton backfill      [iterative]
@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 from nhse_probabilistic_linkage_spark.config import DedupConfig
 from nhse_probabilistic_linkage_spark.sources import fs
 from nhse_probabilistic_linkage_spark.functions.minhash import with_minhash
-from nhse_probabilistic_linkage_spark.functions.simhash import with_simhash
 from nhse_probabilistic_linkage_spark.functions.text import prepare_docs
 from nhse_probabilistic_linkage_spark.operators.best_match import elect_canonical
 from nhse_probabilistic_linkage_spark.operators.connected_components import assign_components
@@ -58,7 +57,6 @@ class DedupPipeline:
         config: DedupConfig | None = None,
         checkpoint_dir: str | None = None,
         id_col: str = "doc_id",
-        compute_simhash: bool = False,
         collect_metrics: bool = True,
     ):
         self.spark = spark
@@ -81,11 +79,6 @@ class DedupPipeline:
         # checkpoint_dir the stage writes stay durable (and therefore eager) —
         # durability and a fully fused plan are mutually exclusive.
         self.collect_metrics = collect_metrics
-        # the MinHash detector never reads simhash, and the standalone
-        # simhash detector (operators.dedup.simhash_pairs) computes its own —
-        # so the second Arrow kernel (~40% of the signatures stage) runs only
-        # when a caller explicitly wants the column persisted for reuse
-        self.compute_simhash = compute_simhash
         self.metrics: list[StageMetric] = []
         # per-partition lineage counters: (run_id, stage, partition_id, rows)
         # -- the reference logs models/metrics to a Delta table
@@ -109,20 +102,15 @@ class DedupPipeline:
     def _manifest_path(self) -> str | None:
         return fs.join(self.checkpoint_dir, "manifest.json") if self.checkpoint_dir else None
 
-    def _pinned_config(self) -> str:
-        # compute_simhash changes the signatures checkpoint's schema, so it
-        # is part of the resume contract alongside the detector config
-        return self.config.to_json() + f"|simhash={self.compute_simhash}"
-
     def _load_manifest(self, input_fingerprint: str) -> dict:
-        fresh = {"config": self._pinned_config(), "input": input_fingerprint, "done": []}
+        fresh = {"config": self.config.to_json(), "input": input_fingerprint, "done": []}
         p = self._manifest_path()
         if p:
             raw = fs.read_text(self.spark, p)
             if raw is not None:
                 m = json.loads(raw)
                 # config OR input changed -> stale checkpoints must not be reused
-                if m.get("config") != self._pinned_config() or m.get("input") != input_fingerprint:
+                if m.get("config") != self.config.to_json() or m.get("input") != input_fingerprint:
                     return fresh
                 return m
         return fresh
@@ -234,11 +222,7 @@ class DedupPipeline:
         )
 
         sig_df = with_minhash(prepared, num_perms=cfg.num_perms, seed=cfg.minhash_seed)
-        sig_cols = [self.id_col, "minhash"]
-        if self.compute_simhash:
-            sig_df = with_simhash(sig_df)
-            sig_cols.append("simhash")
-        signatures = self._materialize(sig_df.select(*sig_cols), "signatures", manifest)
+        signatures = self._materialize(sig_df.select(self.id_col, "minhash"), "signatures", manifest)
 
         bands = band_keys(
             signatures, id_col=self.id_col, bands=cfg.bands, rows_per_band=cfg.rows_per_band

@@ -17,7 +17,14 @@ stream-static interaction that needs multi-step batch logic):
                    + new x old   (join against the persisted band store)
       4. one exact-Jaccard verify over both candidate sets (shingles of old
          docs come from the store)
-      5. write verified pairs + new signatures + new bands, then commit
+      5. write verified pairs + new docs' shingles + new band keys, then
+         commit
+
+The store keeps only what later batches read: `shingles` per doc (the
+verify side of new x old pairs) and `band_key` per band row (the new x old
+join key). Neither the MinHash signature nor the band index is stored: the
+band keys already derive from the signature, band_key hashes the band index
+in, and a new x old pair's match_key comes from the new side's band.
 
 The store is three parquet tables under `state_dir`, each partitioned by
 batch_id; bands additionally by bucket = pmod(band_key, n_buckets) and sigs
@@ -64,10 +71,11 @@ from nhse_probabilistic_linkage_spark.operators.verify import verify_pairs
 from nhse_probabilistic_linkage_spark.sources import fs
 
 PAIRS_SCHEMA = "id_l long, id_r long, match_key int, jaccard double, batch_id long"
-SIGS_SCHEMA = (
-    "doc_id long, shingles array<bigint>, minhash array<bigint>, sig_bucket int, batch_id long"
-)
-BANDS_SCHEMA = "doc_id long, band_id int, band_key long, bucket int, batch_id long"
+# Every read passes these schemas, so a column written by an older release
+# (sigs.minhash, bands.band_id) is ignored rather than refused: the VERSION
+# marker pins the hash representation, not the column set.
+SIGS_SCHEMA = "doc_id long, shingles array<bigint>, sig_bucket int, batch_id long"
+BANDS_SCHEMA = "doc_id long, band_key long, bucket int, batch_id long"
 
 
 class IncrementalDedup:
@@ -108,7 +116,7 @@ class IncrementalDedup:
 
     def _check_layout(self) -> None:
         """Fail loudly on incompatible state instead of corrupting it: a store
-        whose persisted shingle/minhash/band values were computed under a
+        whose persisted shingle/band values were computed under a
         DIFFERENT hash representation would simply never collide with new
         batches — every previously-seen doc silently re-admitted — so a
         version marker is pinned on first write and enforced after. The
@@ -381,7 +389,6 @@ class IncrementalDedup:
             docs.select(
                 "doc_id",
                 "shingles",
-                "minhash",
                 F.pmod("doc_id", F.lit(self.n_buckets)).cast("int").alias("sig_bucket"),
             ),
             self.sigs_path,
@@ -389,7 +396,7 @@ class IncrementalDedup:
             ["batch_id", "sig_bucket"],
         )
         self._write_batch(
-            nb.select("doc_id", "band_id", "band_key", "bucket"),
+            nb.select("doc_id", "band_key", "bucket"),
             self.bands_path,
             batch_id,
             ["batch_id", "bucket"],

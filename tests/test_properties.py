@@ -2,11 +2,8 @@
 
 Each property runs a handful of generated examples through real Spark jobs,
 so example counts are small and deadlines disabled — the value is the
-generator's adversarial shapes (empty docs, dup tokens, fractional-second
-timestamps), not volume.
+generator's adversarial shapes (empty docs, dup tokens), not volume.
 """
-
-from datetime import datetime, timedelta
 
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
@@ -77,50 +74,3 @@ def test_verify_jaccard_equals_set_jaccard(spark, a, b):
     sa, sb = set(a), set(b)
     want = len(sa & sb) / len(sa | sb) if (sa | sb) else 1.0
     assert got == pytest.approx(want)
-
-
-@settings(**_SETTINGS)
-@given(
-    points=st.lists(
-        st.integers(min_value=0, max_value=7_200_000),  # ms offsets over 2h
-        min_size=1,
-        max_size=15,
-    ),
-    intervals=st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=7_200_000),
-            st.integers(min_value=0, max_value=600_000),  # width ms
-        ),
-        min_size=1,
-        max_size=8,
-    ),
-    bucket_seconds=st.sampled_from([60, 600, 3600]),
-)
-def test_range_join_matches_brute_force(spark, points, intervals, bucket_seconds):
-    """Bucketized range join == brute-force containment join for arbitrary
-    (fractional-second) timestamps and bucket widths."""
-    from nhse_probabilistic_linkage_spark.operators.ranges import range_join
-
-    base = datetime(2024, 1, 1)
-    p = spark.createDataFrame(
-        [(i, base + timedelta(milliseconds=ms)) for i, ms in enumerate(points)],
-        "pid long, ts timestamp",
-    )
-    iv = spark.createDataFrame(
-        [
-            (j, base + timedelta(milliseconds=s), base + timedelta(milliseconds=s + w))
-            for j, (s, w) in enumerate(intervals)
-        ],
-        "iid long, start timestamp, end timestamp",
-    )
-    got = sorted(
-        (r.pid, r.iid)
-        for r in range_join(p, iv, bucket_seconds=bucket_seconds).collect()
-    )
-    want = sorted(
-        (i, j)
-        for i, ms in enumerate(points)
-        for j, (s, w) in enumerate(intervals)
-        if s <= ms < s + w
-    )
-    assert got == want
