@@ -86,10 +86,10 @@ def parse_args(argv=None):
     p.add_argument(
         "--fused",
         action="store_true",
-        help="production plan shape (collect_metrics=False): lazy stage/tier "
-        "handoffs, no per-stage count barriers or lineage scans; outputs are "
-        "bit-identical (test-pinned) but per-stage walls/lineage are not "
-        "recorded. With --checkpoint-dir the durable writes stay eager.",
+        help="union mode only; ignored in cascade mode, which has one plan "
+        "shape. Runs DedupPipeline(collect_metrics=False): no per-stage count "
+        "jobs, so per-stage rows/walls are not recorded; outputs and the "
+        "never-silent accounting (dropped bands, gated pairs) are the same.",
     )
     return p.parse_args(argv)
 
@@ -131,17 +131,12 @@ def main(argv=None) -> dict:
     pages = pages.withColumn("doc_id", F.xxhash64("url")).localCheckpoint(eager=True)
 
     if args.mode == "cascade":
-        from nhse_probabilistic_linkage_spark.plans.tiers import (
-            lineage_df,
-            metrics_df,
-            tiered_dedup,
-        )
+        from nhse_probabilistic_linkage_spark.plans.tiers import metrics_df, tiered_dedup
 
         emb = spark.read.parquet(args.embeddings) if args.embeddings else None
         # --checkpoint-dir makes the cascade resumable too: completed tiers'
         # drops tables are reused, the manifest pins config + input
-        result = tiered_dedup(pages, cfg, embeddings=emb, checkpoint_dir=args.checkpoint_dir,
-                              collect_metrics=not args.fused)
+        result = tiered_dedup(pages, cfg, embeddings=emb, checkpoint_dir=args.checkpoint_dir)
         os.makedirs(args.output, exist_ok=True)
         result["status"].write.mode("overwrite").parquet(os.path.join(args.output, "status"))
         result["survivors"].write.mode("overwrite").parquet(
@@ -151,15 +146,11 @@ def main(argv=None) -> dict:
             os.path.join(args.output, "tier_metrics")
         )
         # never-silent drop accounting (dropped bands/buckets, gated pairs):
-        # written in BOTH metered and fused modes — a production operator
-        # must always be able to see what candidate generation discarded
+        # a production operator must always be able to see what candidate
+        # generation discarded
         result["accounting"].write.mode("overwrite").parquet(
             os.path.join(args.output, "tier_accounting")
         )
-        if result["lineage"]:
-            lineage_df(spark, result["lineage"]).write.mode("overwrite").parquet(
-                os.path.join(args.output, "tier_lineage")
-            )
         if prefilter_metrics is not None:
             prefilter_metrics.write.mode("overwrite").parquet(
                 os.path.join(args.output, "prefilter_drops")

@@ -27,17 +27,15 @@ Scale notes:
 - Dropped-doc status rows are (id, tier, canonical) — narrow — and the
   canonical-chain resolution joins tier maps that SHRINK monotonically
   (tier N's map only contains docs that survived tiers < N).
-- Each tier's survivor id set is cut (localCheckpoint) because the next
-  tier and the status union both scan it; without the cut the previous
-  tier's full lineage (including the MinHash kernel) would re-execute. With
-  collect_metrics=True the cuts are eager (honest per-tier walls); with
-  collect_metrics=False they are lazy — materialized by the single final
-  accounting job, no per-tier serial barriers.
+- Each tier's survivor id set is cut (lazy localCheckpoint) because the
+  next tier and the status union both scan it; without the cut the previous
+  tier's full lineage (including the MinHash kernel) would re-execute. The
+  cuts are materialized by the single final accounting job, so there are no
+  per-tier serial barriers.
 """
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -46,6 +44,7 @@ from pyspark.sql import functions as F
 from nhse_probabilistic_linkage_spark.config import DedupConfig
 from nhse_probabilistic_linkage_spark.operators.connected_components import assign_components
 from nhse_probabilistic_linkage_spark.operators.dedup import exact_dedup, minhash_lsh_pairs
+from nhse_probabilistic_linkage_spark.plans.pipeline import _StageCheckpoints
 
 
 @dataclass(frozen=True)
@@ -54,7 +53,6 @@ class TierMetric:
     n_in: int
     n_dropped: int
     n_out: int
-    seconds: float = 0.0
     resumed: bool = False
 
 
@@ -78,7 +76,6 @@ def tiered_dedup(
     vec_col: str = "embedding",
     cosine_threshold: float = 0.95,
     exact_cosine: bool = False,
-    collect_metrics: bool = True,
     checkpoint_dir: str | None = None,
     input_fingerprint: str | None = None,
     cosine_planes: int | None = None,
@@ -96,54 +93,40 @@ def tiered_dedup(
     metrics   list[TierMetric] — per-tier in/dropped/out counts (the north
               rule's drop accounting: nothing is removed silently).
     accounting DataFrame (tier, metric, band_key, n): over-cap dropped LSH
-              bands / embedding buckets and estimate-gated pair counts —
-              recorded in fused mode too; resumed tiers contribute nothing
-              (their accounting was recorded by the producing run).
+              bands / embedding buckets and estimate-gated pair counts;
+              resumed tiers contribute nothing (their accounting was
+              recorded by the producing run).
 
     The embedding tier runs only when `embeddings` (id_col, vec_col) is
     passed; docs without a vector pass through it untouched (a missing
     embedding must not silently delete a document).
 
-    `collect_metrics=True` (the evaluation shape) takes an eager checkpoint
-    + count at every tier boundary so `TierMetric.seconds` are honest
-    per-tier walls. `collect_metrics=False` is the PRODUCTION shape: tier
-    handoffs become lazy localCheckpoints (reused after first
-    materialization, but no serial count barriers — at 100 TB each barrier
-    is a full materialization of the id set), and the identical drop
-    accounting comes from ONE final groupBy over the status table;
-    per-tier seconds are 0.0 by construction. The status/survivors output
-    is bit-identical between the two modes (pinned in tests/test_tiers.py).
+    There is one plan shape: tier handoffs are lazy localCheckpoints (reused
+    after first materialization, but no serial count barriers — at 100 TB
+    each barrier is a full materialization of the id set), and the per-tier
+    drop counts come from ONE final groupBy over the status table.
 
-    `checkpoint_dir` makes the cascade RESUMABLE (same contract as
-    DedupPipeline's stage checkpoints): each tier's drops table — the only
-    artifact that is expensive to recompute — is written to durable parquet
-    under the dir, and a manifest pins the config JSON, the cascade
-    parameters, and an input fingerprint (count + id checksum computed when
-    none is passed). A re-run with the same dir skips every completed
-    tier's detector entirely (TierMetric.resumed = True); a run with a
-    different config, parameters, or input starts fresh — stale tier drops
-    are never reused. Survivor id sets are NOT persisted: they derive from
-    the saved drops by narrow anti-joins, which costs one cheap join per
-    tier on resume instead of double the checkpoint footprint. Durable tier
-    writes are eager by nature, so `collect_metrics=False` with a
-    checkpoint_dir still materializes once per tier — durability and a
-    fully fused plan are mutually exclusive by construction.
+    `checkpoint_dir` makes the cascade RESUMABLE through the same stage
+    checkpoints as DedupPipeline (plans.pipeline._StageCheckpoints): each
+    tier's drops table — the only artifact that is expensive to recompute —
+    is written to durable parquet under the dir, and a manifest pins the
+    config JSON, the cascade parameters, and an input fingerprint (count +
+    id checksum computed when none is passed). A re-run with the same dir
+    skips every completed tier's detector entirely (TierMetric.resumed =
+    True); a run with a different config, parameters, or input starts fresh
+    — stale tier drops are never reused. Survivor id sets are NOT persisted:
+    they derive from the saved drops by narrow anti-joins, which costs one
+    cheap join per tier on resume instead of double the checkpoint
+    footprint. Durable tier writes are eager by nature, so a run with a
+    checkpoint_dir materializes once per tier.
     """
-    import time
-
     spark = docs.sparkSession
-
-    def _cut(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=collect_metrics)
-
-    # ---- durable-resume control plane (mirrors DedupPipeline._materialize;
-    # shares sources/fs so file:/hdfs:/s3a: dirs all work) ------------------
-    manifest: dict | None = None
-    resumed_tiers: set[str] = set()
-    if checkpoint_dir is not None:
-        from nhse_probabilistic_linkage_spark.sources import fs
-
-        params = {
+    ids0 = docs.select(F.col(id_col).cast("long").alias(id_col)).localCheckpoint(eager=False)
+    ckpt = _StageCheckpoints(
+        spark,
+        checkpoint_dir,
+        "cascade_manifest.json",
+        {
             "config": config.to_json(),
             "id_col": id_col,
             "text_col": text_col,
@@ -153,34 +136,29 @@ def tiered_dedup(
             "exact_cosine": exact_cosine,
             "cosine_planes": cosine_planes,
             "cosine_tables": cosine_tables,
-        }
-        if input_fingerprint is None:
-            row = docs.agg(
-                F.count("*").alias("n"),
-                F.sum(F.xxhash64(F.col(id_col).cast("long")).cast("decimal(38,0)")).alias("h"),
-            ).collect()[0]
-            input_fingerprint = f"n={row['n']},h={row['h']}"
-        mpath = fs.join(checkpoint_dir, "cascade_manifest.json")
-        fresh = {"params": params, "input": input_fingerprint, "done": []}
-        manifest = fresh
-        raw = fs.read_text(spark, mpath)
-        if raw is not None:
-            m = json.loads(raw)
-            if m.get("params") == params and m.get("input") == input_fingerprint:
-                manifest = m
+        },
+        ids0,
+        id_col,
+        input_fingerprint,
+    )
+    resumed_tiers: set[str] = set()
 
-        def _save_manifest() -> None:
-            fs.mkdirs(spark, checkpoint_dir)
-            fs.write_text(spark, mpath, json.dumps(manifest, indent=2))
-
-    lineage_rows: list[tuple] = []
+    def _drops(name: str, build) -> DataFrame:
+        """A tier's drops table through the shared stage checkpoints.
+        `build` is a thunk: several detectors do EAGER work at
+        plan-construction time (candidate_pairs cuts its own output; the
+        semantic tier checkpoints + probes the embedding table), so on
+        resume the detector must never even be constructed."""
+        out, _, resumed = ckpt.stage(name, lambda: (build(), []))
+        if resumed:
+            resumed_tiers.add(name)
+        return out
 
     # never-silent drop accounting (dropped LSH bands / embedding buckets,
-    # estimate-gated pairs) — recorded in BOTH metered and fused modes: the
-    # detectors materialize these tables eagerly as part of candidate
-    # generation, so observing them adds no extra barrier. Like lineage,
-    # rows come only from tiers that actually RAN this call; a resumed
-    # tier's accounting was recorded by the producing run.
+    # estimate-gated pairs): the detectors materialize these tables eagerly
+    # as part of candidate generation, so observing them adds no extra
+    # barrier. Rows come only from tiers that actually RAN this call; a
+    # resumed tier's accounting was recorded by the producing run.
     acct_parts: list[DataFrame] = []
     _ACCT_SCHEMA = "tier string, metric string, band_key bigint, n bigint"
 
@@ -194,48 +172,6 @@ def tiered_dedup(
             )
         )
 
-    def _record_lineage(name: str, out: DataFrame) -> None:
-        """Per-partition row counts for a tier's drops table (the pipeline's
-        per-partition lineage contract, extended to the cascade). Metrics
-        mode only — the fused production plan takes no extra jobs."""
-        if not collect_metrics:
-            return
-        for r in (
-            out.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        ):
-            lineage_rows.append((name, int(r["partition_id"]), int(r["rows"])))
-
-    def _durable(name: str, build) -> DataFrame:
-        """Persist a tier's drops table durably (or localCheckpoint-cut it
-        when no checkpoint_dir). `build` is a thunk: several detectors do
-        EAGER work at plan-construction time (candidate_pairs cuts its own
-        output; the semantic tier checkpoints + probes the embedding table),
-        so on resume the detector must never even be constructed."""
-        if checkpoint_dir is None:
-            out = _cut(build())
-            _record_lineage(name, out)
-            return out
-        from nhse_probabilistic_linkage_spark.sources import fs
-
-        path = fs.join(checkpoint_dir, name)
-        if name in manifest["done"]:
-            resumed_tiers.add(name)
-            return spark.read.parquet(path)
-        build().write.mode("overwrite").parquet(path)
-        manifest["done"].append(name)
-        _save_manifest()
-        out = spark.read.parquet(path)
-        _record_lineage(name, out)
-        return out
-
-    ids0 = _cut(docs.select(F.col(id_col).cast("long").alias(id_col)))
-    metrics: list[TierMetric] = []
-    if collect_metrics:
-        n0 = ids0.count()
-        t_tier = time.monotonic()
-
     # ---- tier 1: exact (128-bit fingerprint groupBy) ----------------------
     def _build_exact() -> DataFrame:
         groups = exact_dedup(docs, id_col=id_col, text_col=text_col)
@@ -244,16 +180,8 @@ def tiered_dedup(
             F.col("rep_id").cast("long").alias("canonical_id"),
         )
 
-    exact_drops = _durable("exact_drops", _build_exact)
-    surv1 = _cut(ids0.join(exact_drops.select(id_col), id_col, "left_anti"))
-    if collect_metrics:
-        n1 = surv1.count()
-        # tier walls are meaningful: each tier ends in eager checkpoints + count
-        metrics.append(
-            TierMetric("exact", n0, n0 - n1, n1, time.monotonic() - t_tier,
-                       resumed="exact_drops" in resumed_tiers)
-        )
-        t_tier = time.monotonic()
+    exact_drops = _drops("exact_drops", _build_exact)
+    surv1 = ids0.join(exact_drops.select(id_col), id_col, "left_anti").localCheckpoint(eager=False)
 
     # ---- tier 2: near (MinHash LSH + exact-Jaccard verify) ----------------
     near_gate: dict = {}
@@ -268,7 +196,7 @@ def tiered_dedup(
             surv1, pairs.select(F.col("id_l").alias("src"), F.col("id_r").alias("dst")), id_col
         )
 
-    near_drops = _durable("near_drops", _build_near)
+    near_drops = _drops("near_drops", _build_near)
     if near_gate:
         # the estimate gate's counts were taken eagerly inside verify_pairs
         # during the build; a resumed tier never fills this (see above)
@@ -278,14 +206,7 @@ def tiered_dedup(
                 _ACCT_SCHEMA,
             )
         )
-    surv2 = _cut(surv1.join(near_drops.select(id_col), id_col, "left_anti"))
-    if collect_metrics:
-        n2 = surv2.count()
-        metrics.append(
-            TierMetric("near", n1, n1 - n2, n2, time.monotonic() - t_tier,
-                       resumed="near_drops" in resumed_tiers)
-        )
-        t_tier = time.monotonic()
+    surv2 = surv1.join(near_drops.select(id_col), id_col, "left_anti").localCheckpoint(eager=False)
 
     # ---- tier 3: semantic (embedding cosine), optional --------------------
     if embeddings is not None:
@@ -325,14 +246,8 @@ def tiered_dedup(
                 surv2, epairs.select(F.col("id_l").alias("src"), F.col("id_r").alias("dst")), id_col
             )
 
-        sem_drops = _durable("sem_drops", _build_semantic)
-        surv3 = _cut(surv2.join(sem_drops.select(id_col), id_col, "left_anti"))
-        if collect_metrics:
-            n3 = surv3.count()
-            metrics.append(
-                TierMetric("semantic", n2, n2 - n3, n3, time.monotonic() - t_tier,
-                           resumed="sem_drops" in resumed_tiers)
-            )
+        sem_drops = _drops("sem_drops", _build_semantic)
+        surv3 = surv2.join(sem_drops.select(id_col), id_col, "left_anti").localCheckpoint(eager=False)
     else:
         sem_drops = None
         surv3 = surv2
@@ -371,20 +286,19 @@ def tiered_dedup(
         status = status.unionByName(p)
     status = status.select(id_col, "tier", "canonical_id")
 
-    if not collect_metrics:
-        # production-mode accounting: ONE job over the (lazily checkpointed)
-        # status table drives the whole fused plan and yields the identical
-        # per-tier drop counts — n_in chains by subtraction since tiers are
-        # strictly sequential. Per-tier walls don't exist in a fused plan.
-        status = status.localCheckpoint(eager=False)
-        counts = {r["tier"]: r["n"] for r in status.groupBy("tier").agg(F.count("*").alias("n")).collect()}
-        n_in = sum(counts.values())
-        _drop_name = {"exact": "exact_drops", "near": "near_drops", "semantic": "sem_drops"}
-        for tier in ("exact", "near", *(("semantic",) if embeddings is not None else ())):
-            d = counts.get(tier, 0)
-            metrics.append(TierMetric(tier, n_in, d, n_in - d,
-                                      resumed=_drop_name[tier] in resumed_tiers))
-            n_in -= d
+    # ONE job over the (lazily checkpointed) status table drives the whole
+    # plan and yields the per-tier drop counts — n_in chains by subtraction
+    # since tiers are strictly sequential.
+    status = status.localCheckpoint(eager=False)
+    counts = {r["tier"]: r["n"] for r in status.groupBy("tier").agg(F.count("*").alias("n")).collect()}
+    n_in = sum(counts.values())
+    metrics: list[TierMetric] = []
+    _drop_name = {"exact": "exact_drops", "near": "near_drops", "semantic": "sem_drops"}
+    for tier in ("exact", "near", *(("semantic",) if embeddings is not None else ())):
+        d = counts.get(tier, 0)
+        metrics.append(TierMetric(tier, n_in, d, n_in - d,
+                                  resumed=_drop_name[tier] in resumed_tiers))
+        n_in -= d
 
     survivors = docs.join(surv3, id_col, "left_semi")
     accounting = spark.createDataFrame([], _ACCT_SCHEMA)
@@ -394,30 +308,17 @@ def tiered_dedup(
         "status": status,
         "survivors": survivors,
         "metrics": metrics,
-        # (drops_table, partition_id, rows) triples; empty in fused mode and
-        # for resumed tiers (their lineage was recorded by the producing run)
-        "lineage": lineage_rows,
         # (tier, metric, band_key, n): dropped_band rows per over-cap LSH
         # band / embedding bucket, plus the gated_pairs count when the
-        # estimate gate is on — populated in fused mode too (never-silent);
-        # resumed tiers contribute nothing (recorded by the producing run)
+        # estimate gate is on (never-silent); resumed tiers contribute
+        # nothing (recorded by the producing run)
         "accounting": accounting,
     }
-
-
-def lineage_df(spark, lineage_rows: list[tuple]) -> DataFrame:
-    """Per-partition lineage as a DataFrame (for the metrics sink)."""
-    return spark.createDataFrame(
-        lineage_rows or [], "table string, partition_id int, rows long"
-    )
 
 
 def metrics_df(spark, metrics: list[TierMetric]) -> DataFrame:
     """Per-tier accounting as a DataFrame (for writing next to the output)."""
     return spark.createDataFrame(
-        [
-            (m.tier, m.n_in, m.n_dropped, m.n_out, round(m.seconds, 3), m.resumed)
-            for m in metrics
-        ],
-        "tier string, n_in long, n_dropped long, n_out long, seconds double, resumed boolean",
+        [(m.tier, m.n_in, m.n_dropped, m.n_out, m.resumed) for m in metrics],
+        "tier string, n_in long, n_dropped long, n_out long, resumed boolean",
     )

@@ -144,6 +144,11 @@ def test_pipeline_checkpoint_resume(spark, corpus, tmp_path):
     clusters3 = sorted((r.doc_id, r.cluster_id) for r in out3["clusters"].collect())
     assert clusters3 == clusters1
 
+    # the text column is pinned too: shingling another column resumes nothing
+    p4 = DedupPipeline(spark, cfg, checkpoint_dir=ckpt)
+    p4.run(pages.withColumn("body", F.col("text")), text_col="body")
+    assert not any(m.extra.get("resumed") for m in p4.metrics)
+
 
 def test_verify_estimate_gate_preserves_pairs(spark, corpus):
     """The MinHash-estimate pre-gate must not change the verified output:
@@ -216,38 +221,87 @@ def test_extracted_text_matches_planted_text(spark, corpus):
     assert mismatches == 0
 
 
-def test_per_partition_lineage(spark, corpus, tmp_path):
-    """North-rule: every stage writes per-partition lineage/counters to the
-    metrics sink. Lineage row counts must reconcile with stage row counts."""
+def test_metrics_table_rows_per_stage(spark, corpus, tmp_path):
+    """North-rule: write_metrics writes one metrics row per stage whose rows
+    equal that stage's count(); a resumed run writes all-resumed rows."""
+    import json
+
     pages, _ = corpus
-    ckpt = str(tmp_path / "lineage_ckpt")
+    ckpt = str(tmp_path / "metrics_ckpt")
     pipe = DedupPipeline(spark, DedupConfig(), checkpoint_dir=ckpt)
     out = pipe.run(pages)
-    out["canonical"].count()
     pipe.write_metrics()
 
-    lineage = spark.read.parquet(f"{ckpt}/lineage")
-    per_stage = {
-        r["stage"]: r["total"]
-        for r in lineage.groupBy("stage").agg(F.sum("rows").alias("total")).collect()
-    }
-    stage_rows = {m.stage: m.rows for m in pipe.metrics if m.rows >= 0}
-    for stage in ("prepare", "signatures", "pairs", "verified", "clusters", "canonical"):
-        assert per_stage[stage] == stage_rows[stage], stage
-    # one run id, stable across identical config+input
-    run_ids = {r["run_id"] for r in lineage.select("run_id").distinct().collect()}
-    assert len(run_ids) == 1
-    assert pipe.run_id in run_ids
+    table = spark.read.parquet(f"{ckpt}/metrics").collect()
+    stage_rows = [r for r in table if r["stage"] in STAGES_EXPECTED]
+    assert sorted(r["stage"] for r in stage_rows) == sorted(STAGES_EXPECTED)
+    for r in stage_rows:
+        key = "prepared" if r["stage"] == "prepare" else r["stage"]
+        assert r["rows"] == out[key].count(), r["stage"]
 
-    # resumed run: stages skip, no duplicate lineage is appended in-memory
     pipe2 = DedupPipeline(spark, DedupConfig(), checkpoint_dir=ckpt)
     pipe2.run(pages)
-    assert all(m.extra.get("resumed") for m in pipe2.metrics)
-    assert pipe2.lineage_rows == []
+    pipe2.write_metrics()
+    resumed = spark.read.parquet(f"{ckpt}/metrics").collect()
+    assert set(STAGES_EXPECTED) <= {r["stage"] for r in resumed}
+    assert all(json.loads(r["extra"]).get("resumed") for r in resumed)
+
+
+def test_resume_builds_nothing_it_reuses(spark, corpus, tmp_path, monkeypatch):
+    """A stage the manifest lists as done is read back and never built: with
+    candidate_pairs and assign_components patched to raise, a full resume
+    returns the same clusters/canonical; with clusters/canonical dropped
+    from the manifest only assign_components runs, once. The accounting the
+    producing run recorded (dropped bands, gated pairs) is reported again,
+    marked resumed."""
+    import dataclasses
+    import json
+
+    from nhse_probabilistic_linkage_spark.plans import pipeline as pl
+
+    pages, _ = corpus
+    cfg = DedupConfig(band_cap=2, verify_estimate_gate=True)
+    ckpt = str(tmp_path / "ckpt")
+    p1 = DedupPipeline(spark, cfg, checkpoint_dir=ckpt)
+    out1 = p1.run(pages)
+
+    def rows(out):
+        return [sorted(map(tuple, out[k].collect())) for k in ("clusters", "canonical")]
+
+    want = rows(out1)
+    acct_stages = ("pairs.dropped_bands", "verified.gated_pairs")
+    fresh = {m.stage: m for m in p1.metrics if m.stage in acct_stages}
+    assert set(fresh) == set(acct_stages)
+    assert fresh["pairs.dropped_bands"].rows > 0
+
+    def built(*args, **kwargs):
+        raise AssertionError("a resumed stage was built")
+
+    real_cc = pl.assign_components
+    monkeypatch.setattr(pl, "candidate_pairs", built)
+    monkeypatch.setattr(pl, "assign_components", built)
+    p2 = DedupPipeline(spark, cfg, checkpoint_dir=ckpt)
+    assert rows(p2.run(pages)) == want
+    for stage, m in fresh.items():
+        again = [x for x in p2.metrics if x.stage == stage]
+        assert again == [dataclasses.replace(m, extra={**m.extra, "resumed": True})]
+
+    manifest = tmp_path / "ckpt" / "manifest.json"
+    m = json.loads(manifest.read_text())
+    m["done"] = [s for s in m["done"] if s not in ("clusters", "canonical")]
+    manifest.write_text(json.dumps(m))
+    calls = []
+    monkeypatch.setattr(
+        pl, "assign_components", lambda *a, **k: calls.append(1) or real_cc(*a, **k)
+    )
+    p3 = DedupPipeline(spark, cfg, checkpoint_dir=ckpt)
+    assert rows(p3.run(pages)) == want
+    assert len(calls) == 1
+
 
 def test_fused_pipeline_identical_output(spark, corpus):
-    """collect_metrics=False (production shape: lazy stage cuts, no per-stage
-    count/lineage jobs) must produce bit-identical canonical assignments to
+    """collect_metrics=False (production shape: no per-stage count jobs)
+    must produce bit-identical canonical assignments to
     the metered shape, while still recording the never-silent accounting
     (the adaptive-gate decision) and none of the per-stage row metrics."""
     pages, _ = corpus
@@ -263,7 +317,6 @@ def test_fused_pipeline_identical_output(spark, corpus):
     stages = {m.stage for m in fused.metrics}
     assert "verified.estimate_gate" in stages  # accounting still present
     assert not stages & set(STAGES_EXPECTED), stages  # no per-stage metrics
-    assert fused.lineage_rows == []
     # the metered run recorded every stage
     assert set(STAGES_EXPECTED) <= {m.stage for m in metered.metrics}
 

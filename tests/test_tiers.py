@@ -55,7 +55,7 @@ def test_two_tier_cascade(spark, corpus):
         assert t.n_in - t.n_dropped == t.n_out
     mdf = metrics_df(spark, out["metrics"])
     assert mdf.count() == 2 and set(mdf.columns) == {
-        "tier", "n_in", "n_dropped", "n_out", "seconds", "resumed"
+        "tier", "n_in", "n_dropped", "n_out", "resumed"
     }
 
 
@@ -108,10 +108,10 @@ def test_docs_without_embedding_pass_through(spark, corpus):
     assert kept == [1, 4, 6]
 
 
-def test_fused_mode_identical_status_and_accounting(spark, corpus):
-    """collect_metrics=False (production shape: lazy tier handoffs, one
-    final accounting groupBy, no per-tier count barriers) must produce the
-    SAME status rows and the same n_in/n_dropped/n_out as the metric mode."""
+def test_three_tier_status_and_accounting(spark, corpus):
+    """The cascade's one plan shape (lazy tier handoffs, one final
+    accounting groupBy, no per-tier count barriers): every doc's status row
+    and the per-tier n_in/n_dropped/n_out over all three tiers."""
     emb = spark.createDataFrame(
         [
             (1, [1.0, 0.0, 0.01]),
@@ -120,26 +120,22 @@ def test_fused_mode_identical_status_and_accounting(spark, corpus):
         ],
         "doc_id long, embedding array<double>",
     )
-    kw = dict(embeddings=emb, cosine_threshold=0.99, exact_cosine=True)
-    a = tiered_dedup(corpus, DedupConfig(jaccard_threshold=0.7), **kw)
-    b = tiered_dedup(
-        corpus, DedupConfig(jaccard_threshold=0.7), collect_metrics=False, **kw
-    )
-    rows_a = sorted(tuple(r) for r in a["status"].collect())
-    rows_b = sorted(tuple(r) for r in b["status"].collect())
-    assert rows_a == rows_b
-    acc_a = [(t.tier, t.n_in, t.n_dropped, t.n_out) for t in a["metrics"]]
-    acc_b = [(t.tier, t.n_in, t.n_dropped, t.n_out) for t in b["metrics"]]
-    assert acc_a == acc_b
-    # fused mode has no per-tier walls by construction
-    assert all(t.seconds == 0.0 for t in b["metrics"])
-    surv_a = sorted(r["doc_id"] for r in a["survivors"].collect())
-    surv_b = sorted(r["doc_id"] for r in b["survivors"].collect())
-    assert surv_a == surv_b
+    out = tiered_dedup(corpus, DedupConfig(jaccard_threshold=0.7), embeddings=emb,
+                       cosine_threshold=0.99, exact_cosine=True)
+    assert _status_rows(out) == [
+        (1, "kept", 1), (2, "exact", 1), (3, "near", 1),
+        (4, "kept", 4), (5, "exact", 4), (6, "semantic", 1),
+    ]
+    assert _tier_counts(out) == [("exact", 6, 2, 4), ("near", 4, 1, 3), ("semantic", 3, 1, 2)]
+    assert sorted(r["doc_id"] for r in out["survivors"].collect()) == [1, 4]
 
 
 def _status_rows(out):
     return sorted(tuple(r) for r in out["status"].collect())
+
+
+def _tier_counts(out):
+    return [(t.tier, t.n_in, t.n_dropped, t.n_out) for t in out["metrics"]]
 
 
 def test_cascade_checkpoint_resume(spark, corpus, tmp_path):
@@ -165,6 +161,8 @@ def test_cascade_checkpoint_resume(spark, corpus, tmp_path):
     b = tiered_dedup(corpus, cfg, checkpoint_dir=ckpt, **kw)
     assert [t.resumed for t in b["metrics"]] == [True, True, True]
     assert _status_rows(b) == _status_rows(base)
+    # the per-tier counts of a resumed run come from the same final groupBy
+    assert _tier_counts(b) == _tier_counts(base)
 
     # crash between tier 1 and 2: manifest only records exact_drops
     mp = tmp_path / "cascade_ckpt" / "cascade_manifest.json"
@@ -176,44 +174,18 @@ def test_cascade_checkpoint_resume(spark, corpus, tmp_path):
         "exact": True, "near": False, "semantic": False
     }
     assert _status_rows(c) == _status_rows(base)
+    assert _tier_counts(c) == _tier_counts(base)
 
     # different config -> stale tier drops must never be reused
     d = tiered_dedup(corpus, DedupConfig(jaccard_threshold=0.9), checkpoint_dir=ckpt, **kw)
     assert [t.resumed for t in d["metrics"]] == [False, False, False]
 
-
-def test_cascade_checkpoint_resume_fused_mode(spark, corpus, tmp_path):
-    """checkpoint_dir + collect_metrics=False: durable writes are eager by
-    construction, but the accounting still comes from the one final groupBy
-    and resume still skips the detectors."""
-    cfg = DedupConfig(jaccard_threshold=0.7)
-    ckpt = str(tmp_path / "fused_ckpt")
-    base = tiered_dedup(corpus, cfg)
-    a = tiered_dedup(corpus, cfg, collect_metrics=False, checkpoint_dir=ckpt)
-    b = tiered_dedup(corpus, cfg, collect_metrics=False, checkpoint_dir=ckpt)
-    assert [t.resumed for t in a["metrics"]] == [False, False]
-    assert [t.resumed for t in b["metrics"]] == [True, True]
-    assert _status_rows(a) == _status_rows(base)
-    assert _status_rows(b) == _status_rows(base)
-    acc = [(t.tier, t.n_in, t.n_dropped, t.n_out) for t in b["metrics"]]
-    assert acc == [(t.tier, t.n_in, t.n_dropped, t.n_out) for t in base["metrics"]]
-
-
-def test_cascade_lineage_rows(spark, corpus):
-    """Metrics mode records per-partition lineage for every tier's drops
-    table; totals must equal the drop accounting. Fused mode records none
-    (no extra jobs by construction)."""
-    from nhse_probabilistic_linkage_spark.plans.tiers import lineage_df
-
-    out = tiered_dedup(corpus, DedupConfig(jaccard_threshold=0.7))
-    by_table = {}
-    for table, _pid, rows in out["lineage"]:
-        by_table[table] = by_table.get(table, 0) + rows
-    m = {t.tier: t for t in out["metrics"]}
-    assert by_table.get("exact_drops", 0) == m["exact"].n_dropped
-    assert by_table.get("near_drops", 0) == m["near"].n_dropped
-    ldf = lineage_df(spark, out["lineage"])
-    assert set(ldf.columns) == {"table", "partition_id", "rows"}
-
-    fused = tiered_dedup(corpus, DedupConfig(jaccard_threshold=0.7), collect_metrics=False)
-    assert fused["lineage"] == []
+    # a two-tier cascade (no embeddings) in its own dir resumes both tiers
+    ckpt2 = str(tmp_path / "two_tier_ckpt")
+    base2 = tiered_dedup(corpus, cfg)
+    e = tiered_dedup(corpus, cfg, checkpoint_dir=ckpt2)
+    f = tiered_dedup(corpus, cfg, checkpoint_dir=ckpt2)
+    assert [t.resumed for t in e["metrics"]] == [False, False]
+    assert [t.resumed for t in f["metrics"]] == [True, True]
+    assert _status_rows(e) == _status_rows(f) == _status_rows(base2)
+    assert _tier_counts(f) == _tier_counts(base2)
