@@ -180,12 +180,18 @@ def test_cascade_checkpoint_resume(spark, corpus, tmp_path):
     d = tiered_dedup(corpus, DedupConfig(jaccard_threshold=0.9), checkpoint_dir=ckpt, **kw)
     assert [t.resumed for t in d["metrics"]] == [False, False, False]
 
-    # a two-tier cascade (no embeddings) in its own dir resumes both tiers
-    ckpt2 = str(tmp_path / "two_tier_ckpt")
-    base2 = tiered_dedup(corpus, cfg)
-    e = tiered_dedup(corpus, cfg, checkpoint_dir=ckpt2)
-    f = tiered_dedup(corpus, cfg, checkpoint_dir=ckpt2)
-    assert [t.resumed for t in e["metrics"]] == [False, False]
-    assert [t.resumed for t in f["metrics"]] == [True, True]
-    assert _status_rows(e) == _status_rows(f) == _status_rows(base2)
-    assert _tier_counts(f) == _tier_counts(base2)
+
+def test_cascade_checkpoint_resume_fused_mode(spark, corpus, tmp_path):
+    """A two-tier cascade (no embeddings) with a checkpoint dir: resume skips
+    both detectors, and the per-tier accounting of the resumed run still
+    comes from the one final groupBy and matches the uncheckpointed run."""
+    cfg = DedupConfig(jaccard_threshold=0.7)
+    ckpt = str(tmp_path / "fused_ckpt")
+    base = tiered_dedup(corpus, cfg)
+    a = tiered_dedup(corpus, cfg, checkpoint_dir=ckpt)
+    b = tiered_dedup(corpus, cfg, checkpoint_dir=ckpt)
+    assert [t.resumed for t in a["metrics"]] == [False, False]
+    assert [t.resumed for t in b["metrics"]] == [True, True]
+    assert _status_rows(a) == _status_rows(base)
+    assert _status_rows(b) == _status_rows(base)
+    assert _tier_counts(b) == _tier_counts(base)
